@@ -45,8 +45,7 @@ object GraftSession {
       // stage — measured 4x on basket_lift's steady-state pass.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
-      .config(InitParts,
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
+      .config(InitParts, cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

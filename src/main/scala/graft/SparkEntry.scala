@@ -66,11 +66,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(_._1).reduce(_ ++ _).map { case (name, fn) =>
       name -> { (s: SparkSession, d: String) =>
-        // Honor the same env override GraftSession.build documents — the
-        // wrapper would otherwise silently clobber it for every registry
-        // query, leaving the knob effective only on non-registry paths.
-        val base = sys.env.get("SPARK_GRAFT_INIT_PARTS").map(_.toInt)
-          .getOrElse(s.conf.get("spark.sql.shuffle.partitions").toInt)
+        val base = s.conf.get("spark.sql.shuffle.partitions").toInt
         s.conf.set(
           "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
           (if (wideStateQueries(name)) base * 16 else base).toString)
@@ -78,10 +74,10 @@ object SparkEntry {
         // one plans: queries that touch no frame cache never trigger the
         // per-access enforcement, and at the 1000x decade a predecessor's
         // resident frame can starve this query's execution pool.
-        Tables.enforceBudgetNow(s)
-        // Pin every frame-cache entry this build touches against budget
-        // eviction until the next query's build starts (Tables.pinScope).
-        Tables.pinScope { fn(s, d) }
+        FrameCache.enforceBudgetNow(s)
+        // Pin every frame-cache slot this build touches against budget
+        // eviction until the next query's build starts.
+        FrameCache.pinScope { fn(s, d) }
       }
     }
 

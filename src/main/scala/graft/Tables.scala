@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loaders for the driver-generated test data.
@@ -11,34 +13,39 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Reader-PLAN cache: `spark.read.parquet` re-lists the directory and
+  /** Reader-plan cache: `spark.read.parquet` re-lists the directory and
     * re-reads the parquet footer on every call (measured ~85 ms/call at
     * sf0.1 — pure driver-side metadata work, guide §7.3), and the registry
     * pays it 1-3x per query per bench pass. Cache the analyzed reader
-    * DataFrame per (session, data fingerprint): a logical PLAN, zero rows —
-    * every action still scans the parquet files, so bench/oracle runs keep
-    * computing from the inputs. This is exactly what a catalog table's
-    * relation cache would do at 100 TB (the swap this loader localizes).
-    * Fingerprint keying (one driver-side listing, ~5 ms) invalidates
-    * naturally when data is regenerated in place; superseded entries for
-    * the same (dir, table) are dropped eagerly so a long stress session
-    * cannot accumulate stale plans.
+    * DataFrame, one slot per (session, path) holding (fingerprint, plan):
+    * a logical PLAN, zero rows — every action still scans the parquet
+    * files, so bench/oracle runs keep computing from the inputs. This is
+    * exactly what a catalog table's relation cache would do at 100 TB (the
+    * swap this loader localizes). A slot whose fingerprint no longer
+    * matches (data regenerated in place) is replaced. Plans hold no
+    * storage, so they stay outside [[FrameCache]]'s byte budget.
     */
-  private val readerPlans = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private type Slots[V] = TrieMap[(SparkSession, String), (String, V)]
+  private val readerPlans: Slots[DataFrame] = TrieMap.empty
+  private val artifactPlans: Slots[DataFrame] = TrieMap.empty
+  private val scanWidth: Slots[Boolean] = TrieMap.empty
+
+  private def slot[V](m: Slots[V], spark: SparkSession, path: String,
+      fp: String)(make: => V): V =
+    m.get((spark, path)) match {
+      case Some((f, v)) if f == fp => v
+      case _ =>
+        // A stopped session's plans can never be used again.
+        m.keys.foreach(k => if (k._1.sparkContext.isStopped) m.remove(k))
+        val v = make
+        m.put((spark, path), (fp, v))
+        v
+    }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = s"$dir@${fingerprint(spark, dir, name)}#$name"
-    readerPlans.getOrElseUpdate((spark, key), {
-      readerPlans.keys.foreach { case k @ (s, d) =>
-        // Purge plans of stopped sessions and superseded fingerprints of
-        // this same table (plans are small; this just bounds growth).
-        if (s.sparkContext.isStopped ||
-            (s == spark && d != key && d.endsWith(s"#$name") &&
-              d.startsWith(dir + "@"))) readerPlans.remove(k)
-      }
-      canonTs(spark.read.parquet(s"$dir/$name.parquet"))
-    })
+    val path = s"$dir/$name.parquet"
+    slot(readerPlans, spark, path, fingerprintPath(spark, path))(
+      canonTs(spark.read.parquet(path)))
   }
 
   /** [[t]]'s reader-plan cache for ARTIFACT paths (persisted index /
@@ -47,20 +54,9 @@ object Tables {
     * of the path so a store rebuilt in place (the persist queries
     * overwrite their root every run) never serves a stale file listing.
     */
-  def artifactPlan(spark: SparkSession, path: String): DataFrame = {
-    val key = s"$path@${fingerprintPath(spark, path)}"
-    readerPlans.getOrElseUpdate((spark, key), {
-      readerPlans.keys.foreach { case k @ (s, d) =>
-        if (s.sparkContext.isStopped ||
-            (s == spark && d != key && d.startsWith(path + "@")))
-          readerPlans.remove(k)
-      }
-      spark.read.parquet(path)
-    })
-  }
-
-  private val scanWidth = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Boolean]
+  def artifactPlan(spark: SparkSession, path: String): DataFrame =
+    slot(artifactPlans, spark, path, fingerprintPath(spark, path))(
+      spark.read.parquet(path))
 
   /** [[t]] with the scan conditionally repartitioned to the session's
     * cores — the guide §2.5 "unsplittable input" fix. The test tables are
@@ -83,9 +79,8 @@ object Tables {
       key: String): DataFrame = {
     val df = t(spark, dir, name)
     val cores = spark.sparkContext.defaultParallelism
-    val narrow = scanWidth.getOrElseUpdate(
-      (spark, s"$dir@${fingerprint(spark, dir, name)}#$name"),
-      df.rdd.getNumPartitions < cores)
+    val narrow = slot(scanWidth, spark, s"$dir/$name.parquet",
+      fingerprint(spark, dir, name))(df.rdd.getNumPartitions < cores)
     if (narrow) df.repartition(cores, org.apache.spark.sql.functions.col(key))
     else df
   }
@@ -178,245 +173,5 @@ object Tables {
       }
     java.util.UUID.nameUUIDFromBytes(
       entries.mkString("\n").getBytes("UTF-8")).toString
-  }
-
-  /** Best-effort release of a purged cache value's persisted data (the
-    * values are DataFrames or tuples of them). Two block owners exist:
-    * CacheManager entries (persist/cache — Dataset.unpersist frees them)
-    * and localCheckpoint RDDs (lineage-truncated; their blocks belong to
-    * the LogicalRDD's backing RDD, which Dataset.unpersist never touches —
-    * unwrap and unpersist it directly, else the blocks linger until GC).
-    * Blocking: eviction runs under a byte budget, so the freed bytes must
-    * be VISIBLE to the next storage poll or the evictor over-evicts.
-    */
-  private def release(v: Any): Unit = v match {
-    case ds: org.apache.spark.sql.Dataset[_] =>
-      try ds.unpersist(blocking = true) catch { case _: Throwable => () }
-      // ROOT node only: a derived frame's lineage may EMBED another cached
-      // frame's LogicalRDD — unpersisting that parent's checkpoint blocks
-      // while its own cache entry still serves it would be fatal (lineage
-      // is truncated; lost localCheckpoint blocks cannot be recomputed).
-      try ds.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = true)
-        case _ => ()
-      } catch { case _: Throwable => () }
-    case p: Product => p.productIterator.foreach(release)
-    case _ => ()
-  }
-
-  // ------------------------------------------------------------------
-  // Global LRU + storage budget over every session-lifetime frame cache.
-  //
-  // Round-12 lesson: 300+ queries in one session each pin persisted /
-  // localCheckpoint'ed frames that were NEVER unpersisted, so the storage
-  // pool saturates mid-run and every later data-sized build runs under
-  // eviction churn (basket_lift: 0.8 s steady → 73 s under pressure). On
-  // a real cluster the same discipline matters: a long-lived session that
-  // only ever adds cached frames eventually starves execution memory on
-  // every executor. Budget: frames are evicted least-recently-used once
-  // total cached bytes (mem + disk, the whole footprint the session has
-  // pinned) exceed ~30% of the driver/executor heap — the unified-memory
-  // region that storage can hold WITHOUT execution evicting it. The most
-  // recently touched entries are never evicted: a query's own frames
-  // (fetched moments ago, possibly lineage-truncated localCheckpoints
-  // that CANNOT be recomputed once their blocks drop) must survive until
-  // the query finishes.
-  // ------------------------------------------------------------------
-  /** LRU key. NOT a case class: a TrieMap field would bring CONTENT
-    * equality/hashing into the LinkedHashMap — two caches with equal
-    * contents would collide, and a map's hashCode would MUTATE while the
-    * entry sits in the LRU (making it unfindable: a leak, and an
-    * eviction that removes from the wrong owner). Identity on the cache
-    * reference is the correct semantics: the owner map IS the identity.
-    */
-  private final class CacheEntry(
-      val cache: scala.collection.concurrent.TrieMap[(SparkSession, String), _],
-      val key: (SparkSession, String)) {
-    override def equals(o: Any): Boolean = o match {
-      case e: CacheEntry => (e.cache eq cache) && e.key == key
-      case _ => false
-    }
-    override def hashCode: Int =
-      System.identityHashCode(cache) * 31 + key.hashCode
-  }
-  private val lru =
-    new java.util.LinkedHashMap[CacheEntry, Long](64, 0.75f, true)
-  private var accessSeq = 0L
-  /** Entries touched within this many accesses of NOW are never evicted —
-    * the FALLBACK guard for cache accesses outside a [[pinScope]] (specs
-    * calling module queries directly). Registry queries get the airtight
-    * guard: every entry touched during their build scope is pinned until
-    * the next build starts, however deep the build chain nests.
-    */
-  private val protectWindow = 8L
-
-  /** Entries touched inside the CURRENT [[pinScope]] — never evicted while
-    * that scope's query is being built (and, because eviction only runs on
-    * cache ACCESS, they stay safe through the query's execution too: the
-    * next access that could evict them happens inside the NEXT query's
-    * build, which resets the set). A fixed 8-access recency window is not
-    * a correctness guard once a build chain touches more than 8 cached
-    * families — several Similarity/Dedup builds nest 3-5 deep already.
-    */
-  private val pinned = new java.util.HashSet[CacheEntry]()
-  private var pinDepth = 0
-
-  /** Scope one query's build: every frame-cache access inside `f` is
-    * pinned against budget eviction until the next outermost pinScope
-    * begins. Re-entrant (nested scopes extend the outer pin set).
-    */
-  def pinScope[T](f: => T): T = {
-    lru.synchronized { if (pinDepth == 0) pinned.clear(); pinDepth += 1 }
-    try f finally lru.synchronized { pinDepth -= 1 }
-  }
-
-  /** Cached-frame byte budget: the `graft.cache.budget` system property
-    * (re-read on every enforcement so tests can shrink it around a single
-    * scenario), else `SPARK_GRAFT_CACHE_BUDGET` (bytes), else 30% of the
-    * JVM heap. local[*] note: driver == executor here, so heap is the
-    * right denominator; on a cluster this would poll executor storage.
-    */
-  private lazy val defaultBudget: Long =
-    sys.env.get("SPARK_GRAFT_CACHE_BUDGET").map(_.toLong)
-      .getOrElse((Runtime.getRuntime.maxMemory * 0.30).toLong)
-  private def budgetBytes: Long =
-    sys.props.get("graft.cache.budget").map(_.toLong)
-      .getOrElse(defaultBudget)
-
-  private def cachedBytes(spark: SparkSession): Long =
-    spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-
-  /** Evict least-recently-used frames of THIS session until the cached
-    * footprint fits the budget (best effort — the protect window and
-    * other sessions' frames are skipped). Runs on every cache access; the
-    * poll is one driver-side block-manager summary, no data touched.
-    */
-  /** Budget enforcement at a QUERY BOUNDARY: the per-access enforcement
-    * below only runs inside freshCacheKey, so a query that touches no
-    * frame cache (most of the analytics family) would otherwise start
-    * its hash aggregates with a predecessor's over-budget frame still
-    * resident — at the 1000x decade that starves the execution pool and
-    * aborts the stage (UNABLE_TO_ACQUIRE_MEMORY). The SparkEntry wrapper
-    * calls this before every registry build; nothing is pinned between
-    * queries, so over-budget leftovers are evictable here.
-    */
-  def enforceBudgetNow(spark: SparkSession): Unit =
-    // At a boundary the recency window is meaningless (it protects the
-    // frames the PREVIOUS query just touched — exactly the leftovers
-    // that must go), so enforcement ignores it. Pins from the previous
-    // query's scope may still SIT in `pinned` (pinScope clears the set
-    // at the START of the next outer scope, not at scope exit) — with
-    // pinDepth == 0 the eviction branch treats them as stale and also
-    // drops them from the pin set.
-    lru.synchronized { enforceBudget(spark, ignoreWindow = true) }
-
-  private def enforceBudget(spark: SparkSession,
-      ignoreWindow: Boolean = false): Unit = lru.synchronized {
-    var total = cachedBytes(spark)
-    val budget = budgetBytes
-    if (total <= budget) return
-    val minKeep = accessSeq - protectWindow
-    var warned = false
-    val it = lru.entrySet().iterator()
-    while (total > budget && it.hasNext) {
-      val e = it.next()
-      if (pinned.contains(e.getKey) && !(ignoreWindow && pinDepth == 0)) {
-        // In-flight pins stay sacred even for boundary enforcement — the
-        // window-ignoring path may only treat pins as stale when no build
-        // scope is active (the wrapper calls it BEFORE pinScope).
-        // In-flight query's own frame — never evictable, whatever its age.
-      } else if (!ignoreWindow && e.getValue >= minKeep && pinDepth == 0) {
-        // Saved by the recency window alone OUTSIDE any pin scope — the
-        // fallback path; log it (once per enforcement pass, this
-        // session's entries only) so an unscoped >8-deep build chain
-        // that would have lost a frame is visible instead of silent.
-        if (!warned && (e.getKey.key._1 eq spark)) {
-          warned = true
-          System.err.println(s"[graft-cache] window-protected " +
-            s"${e.getKey.key._2} under budget pressure (unscoped access)")
-        }
-      } else if ((ignoreWindow || e.getValue < minKeep) &&
-          (e.getKey.key._1 eq spark)) {
-        it.remove()
-        // A boundary eviction (ignoreWindow, pinDepth == 0) can remove an
-        // entry the previous scope left in `pinned`; drop the stale pin
-        // too, else a later unscoped re-registration of the same
-        // (cache,key) would be mistaken for an in-flight pin and never
-        // evicted until the next pinScope clears the set.
-        pinned.remove(e.getKey)
-        e.getKey.cache.remove(e.getKey.key).foreach(release)
-        val now = cachedBytes(spark)
-        System.err.println(s"[graft-cache] evicted ${e.getKey.key._2} " +
-          s"(${(total - now) / 1048576} MiB); cached ${now / 1048576} MiB" +
-          s" / budget ${budget / 1048576} MiB")
-        total = now
-      }
-    }
-  }
-
-  /** Test hook: the LRU-tracked frame-cache keys belonging to `spark` —
-    * the graft-owned resident frames, enumerated deterministically.
-    * Specs assert on THIS (and on the footprint delta) instead of an
-    * absolute global-storage threshold, so residue other suites leave in
-    * the shared pool can never flake a budget assertion.
-    */
-  private[graft] def residentKeys(spark: SparkSession): Seq[String] =
-    lru.synchronized {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = lru.keySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.key._1 eq spark) out += e.key._2
-      }
-      out.toSeq
-    }
-
-  /** Fingerprinted cache key for session-lifetime frame caches, plus the
-    * stale-entry purge: removes (and unpersists) entries of the same
-    * (session, dir) whose fingerprint no longer matches, so in-place data
-    * regeneration does not strand the superseded frames in storage memory.
-    * The fingerprint listing runs on every ACCESS (that is what detects
-    * staleness) — a driver-side directory walk, no data read. Each access
-    * also touches the global LRU and enforces the storage budget above.
-    */
-  def freshCacheKey[V](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
-      spark: SparkSession, dir: String, table: String): (SparkSession, String) = {
-    cache.keys.foreach { case k @ (s, _) =>
-      // Stopped context: the persisted blocks died with it; just drop.
-      if (s.sparkContext.isStopped) cache.remove(k)
-    }
-    val key = s"$dir@${fingerprint(spark, dir, table)}"
-    cache.keys.foreach { case k @ (s, d) =>
-      if (s == spark && d != key && d.startsWith(dir + "@")) {
-        cache.remove(k).foreach(release)
-        lru.synchronized { lru.remove(new CacheEntry(cache, k)) }
-      }
-    }
-    val full = (spark, key)
-    lru.synchronized {
-      accessSeq += 1
-      val entry = new CacheEntry(cache, full)
-      lru.put(entry, accessSeq)
-      if (pinDepth > 0) pinned.add(entry)
-      // Repair sweep: an entry registered here BEFORE its value insert can
-      // be evicted mid-build by nested accesses (remove finds nothing) and
-      // the later-inserted frame would then sit in storage untracked by
-      // the LRU. Re-register any key the owner cache holds that the LRU
-      // lost — O(|cache|) driver-side, caches hold a handful of entries.
-      cache.keys.foreach { k =>
-        val e = new CacheEntry(cache, k)
-        // Out-of-window stamp: a repaired entry was NOT just accessed —
-        // stamping it "now" would window-protect a cold frame for the
-        // next 8 accesses while genuinely warm frames get evicted.
-        if (!lru.containsKey(e)) lru.put(e, accessSeq - protectWindow - 1)
-      }
-      // Drop LRU entries whose session died with a stopped context.
-      val it = lru.keySet().iterator()
-      while (it.hasNext) if (it.next().key._1.sparkContext.isStopped) it.remove()
-    }
-    enforceBudget(spark)
-    full
   }
 }

@@ -845,8 +845,13 @@ object Analytics {
     // |customers|-row frame consumed three times below (offsets, count,
     // rank join) — checkpoint so the orders scan + decimal aggregation
     // run ONCE instead of per consumer.
+    // A null total (every order price null) ranks LAST, as the oracle's
+    // NTILE(ORDER BY total, o_custkey) does under DuckDB's default
+    // NULLS LAST: it gets the past-the-end bucket, where the in-bucket
+    // order falls through to o_custkey.
     val b = totals
-      .withColumn("bucket", floor(col("total") / lit(1000.0)).cast("long"))
+      .withColumn("bucket", coalesce(
+        floor(col("total") / lit(1000.0)).cast("long"), lit(Long.MaxValue)))
       .localCheckpoint()
     // The bucket-count frame is <= |distinct $1000 buckets| rows —
     // metadata at any scale. Collect it ONCE and derive the offset table
@@ -1526,8 +1531,7 @@ object Analytics {
     */
   private[graft] def anomalyMinuteCounts(
       spark: SparkSession, dir: String): DataFrame =
-    mcCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(mcCache, spark, dir, "events"),
+    graft.FrameCache.get(spark, dir, "events", "Analytics.mc")(
       buildAnomalyMinuteCounts(spark, dir).localCheckpoint())
 
   /** The uncached build — one partial-aggregated scan; split out so
@@ -1541,12 +1545,6 @@ object Analytics {
       .groupBy("event_type", "minute")
       .agg(count(lit(1)).as("n"))
 
-  private val mcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Explicit teardown hook for the minute-count and dev frame caches. */
-  def clearAnomalyCache(): Unit = { mcCache.clear(); devCache.clear() }
-
   /** The per-(type, minute) deviation frame shared by [[anomalyMad]],
     * [[anomalyMinutes]] and the streaming alert feed: columns
     * (event_type, minute, n, med, dev, mad). Fingerprint-cached +
@@ -1558,12 +1556,8 @@ object Analytics {
     * the count frame it derives from, so caching it is scale-safe.
     */
   private[graft] def anomalyDev(spark: SparkSession, dir: String): DataFrame =
-    devCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(devCache, spark, dir, "events"),
+    graft.FrameCache.get(spark, dir, "events", "Analytics.dev")(
       buildAnomalyDev(spark, dir).localCheckpoint())
-
-  private val devCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** The uncached dev-frame build — split out so PlanShapeSpec pins the
     * shape that runs at scale (medians broadcast, no sort-merge join)
@@ -1867,27 +1861,23 @@ object Analytics {
     * discipline).
     */
   private[graft] def basketSets(spark: SparkSession, dir: String): DataFrame =
-    basketSetsCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(basketSetsCache, spark, dir, "lineitem"), {
-        // SERIALIZED persist, not localCheckpoint: the order->parts frame
-        // is array-heavy, and its deserialized blocks at 1000x data fill
-        // the protected storage pool until downstream aggregations can't
-        // acquire execution memory (measured: AGGREGATE_OUT_OF_MEMORY in
-        // the pair rollup at 32g/8 threads). Serialized blocks are ~4x
-        // smaller and evict cleanly. withWideState: the per-order
-        // collect_set is the object-agg-over-fact-keys class that needs
-        // the 16x reducer fan-out at 1000x (measured OOM without it) —
-        // paid HERE, once, at build, not by every consumer's plan.
-        graft.GraftSession.withWideState(spark) {
-          val ps = buildBasketSets(spark, dir)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          ps.count()
-          ps
-        }
-      })
-
-  private val basketSetsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    graft.FrameCache.get(spark, dir, "lineitem", "Analytics.basketSets") {
+      // SERIALIZED persist, not localCheckpoint: the order->parts frame
+      // is array-heavy, and its deserialized blocks at 1000x data fill
+      // the protected storage pool until downstream aggregations can't
+      // acquire execution memory (measured: AGGREGATE_OUT_OF_MEMORY in
+      // the pair rollup at 32g/8 threads). Serialized blocks are ~4x
+      // smaller and evict cleanly. withWideState: the per-order
+      // collect_set is the object-agg-over-fact-keys class that needs
+      // the 16x reducer fan-out at 1000x (measured OOM without it) —
+      // paid HERE, once, at build, not by every consumer's plan.
+      graft.GraftSession.withWideState(spark) {
+        val ps = buildBasketSets(spark, dir)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        ps.count()
+        ps
+      }
+    }
 
   /** The uncached ps build — split out so PlanShapeSpec pins the BUILD
     * shape (one partial-aggregated fact scan) after the checkpoint
@@ -1908,8 +1898,7 @@ object Analytics {
     */
   private[graft] def basketPairCounts(
       spark: SparkSession, dir: String): DataFrame =
-    basketPairsCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(basketPairsCache, spark, dir, "lineitem"),
+    graft.FrameCache.get(spark, dir, "lineitem", "Analytics.basketPairs")(
       basketSets(spark, dir)
         .filter(size(col("ps")) >= 2)
         .select(explode(expr(
@@ -1921,9 +1910,6 @@ object Analytics {
         .agg(count(lit(1)).as("n_both"))
         .filter(col("n_both") >= 2L)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-
-  private val basketPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** Association lift over the repeated basket pairs: n_both·N /
     * (n_p1·n_p2) in ppm — [[basketPairs]] counts co-occurrence, lift

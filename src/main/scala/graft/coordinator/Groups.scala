@@ -21,12 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Groups {
 
-  /** Per-partition log-end offsets + head timestamp (the input the group
-    * coordinator reads from the log).
-    */
-  private val leoCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** Log-end offsets per partition, the frame every coordinator view
     * composes (often 3-6 times per query: group state, member
     * heartbeats, commits, the now watermark). Offsets are a dense
@@ -38,8 +32,7 @@ object Groups {
     * equivalence).
     */
   private def leo(spark: SparkSession, dir: String): DataFrame =
-    leoCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(leoCache, spark, dir, "events"),
+    graft.FrameCache.get(spark, dir, "events", "Groups.leo")(
       LogOps.logBase(spark, dir).groupBy("topic", "part").agg(
         count(lit(1)).as("log_end"),
         max("tms").as("latest_ms"))
@@ -341,25 +334,21 @@ object Groups {
     * Window+Sort pairs, 13 Exchanges for metadata-sized frames); caching
     * the 12-row result cuts every consumer to pure broadcast joins.
     */
-  private val mhCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private[coordinator] def memberHeartbeats(spark: SparkSession, dir: String): DataFrame =
-    mhCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(mhCache, spark, dir, "events"), {
-        val w = Window.partitionBy("topic").orderBy("part")
-        val groups = spark.range(0, 4, 1, 1).withColumnRenamed("id", "g")
-        leo(spark, dir)
-          .withColumn("idx", row_number().over(w).cast("long") - 1L)
-          .withColumn("np", count(lit(1)).over(Window.partitionBy("topic")))
-          .withColumn("m", expr(rangeMemberExpr(3)))
-          .crossJoin(groups)
-          .groupBy("g", "m")
-          .agg(count(lit(1)).as("n_parts"), max("latest_ms").as("hb_base"))
-          .withColumn("last_hb_ms",
-            col("hb_base") - col("g") * (col("m") + 1L) * lit(14400000L))
-          .localCheckpoint()
-      })
+    graft.FrameCache.get(spark, dir, "events", "Groups.mh") {
+      val w = Window.partitionBy("topic").orderBy("part")
+      val groups = spark.range(0, 4, 1, 1).withColumnRenamed("id", "g")
+      leo(spark, dir)
+        .withColumn("idx", row_number().over(w).cast("long") - 1L)
+        .withColumn("np", count(lit(1)).over(Window.partitionBy("topic")))
+        .withColumn("m", expr(rangeMemberExpr(3)))
+        .crossJoin(groups)
+        .groupBy("g", "m")
+        .agg(count(lit(1)).as("n_parts"), max("latest_ms").as("hb_base"))
+        .withColumn("last_hb_ms",
+          col("hb_base") - col("g") * (col("m") + 1L) * lit(14400000L))
+        .localCheckpoint()
+    }
 
   private[coordinator] def nowMs(spark: SparkSession, dir: String): DataFrame =
     leo(spark, dir).agg(max("latest_ms").as("now_ms"))
@@ -580,28 +569,24 @@ object Groups {
     * user-data length prefix (4). Composes the assign_range map so the
     * bytes Sync distributes are exactly the assignor's output.
     */
-  private val mabCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private[coordinator] def memberAssignmentBytes(spark: SparkSession, dir: String)
       : DataFrame =
     // 3-row result behind the same Window-over-topicParts subtree as
     // [[memberHeartbeats]]; checkpoint-cached for the same reason.
-    mabCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(mabCache, spark, dir, "events"), {
-        val w = Window.partitionBy("topic").orderBy("part")
-        topicParts(spark, dir)
-          .withColumn("idx", row_number().over(w).cast("long") - 1L)
-          .withColumn("np", count(lit(1)).over(Window.partitionBy("topic")))
-          .withColumn("m", expr(rangeMemberExpr(3)))
-          .groupBy("m", "topic")
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy("m")
-          .agg((lit(10L) + sum(lit(2L) + length(col("topic")).cast("long") +
-            lit(4L) + lit(4L) * col("cnt"))).cast("long")
-            .as("assignment_bytes"))
-          .localCheckpoint()
-      })
+    graft.FrameCache.get(spark, dir, "events", "Groups.mab") {
+      val w = Window.partitionBy("topic").orderBy("part")
+      topicParts(spark, dir)
+        .withColumn("idx", row_number().over(w).cast("long") - 1L)
+        .withColumn("np", count(lit(1)).over(Window.partitionBy("topic")))
+        .withColumn("m", expr(rangeMemberExpr(3)))
+        .groupBy("m", "topic")
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy("m")
+        .agg((lit(10L) + sum(lit(2L) + length(col("topic")).cast("long") +
+          lit(4L) + lit(4L) * col("cnt"))).cast("long")
+          .as("assignment_bytes"))
+        .localCheckpoint()
+    }
 
   /** SyncGroup decision table — the rebalance's second barrier
     * (GroupCoordinator.handleSyncGroup / doSyncGroup,

@@ -37,9 +37,6 @@ object Clustering {
   private[llm] val FitK = 16
   private[llm] val MaxRounds = 4
 
-  private val fitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** K-means fitted to fixpoint (bounded by [[MaxRounds]]) over the
     * embedding table, seeded from the [[FitK]] lowest-id vectors — the
     * centroids [[kmeansFit]] publishes and Similarity's IVF family
@@ -57,8 +54,7 @@ object Clustering {
     // Keyed on a content fingerprint of the embeddings table, not the path
     // alone: data regenerated in-place mid-session (the gen_stress
     // workflow) re-fits instead of serving stale centroids.
-    fitCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(fitCache, spark, dir, "embeddings"), {
+    graft.FrameCache.get(spark, dir, "embeddings", "Clustering.fit") {
       val vecs = Embeddings.directional(spark, dir)
       var cents = vecs.filter(col("vec_id") < FitK)
         .select(col("vec_id").as("cid"), col("v").as("cv"),
@@ -93,7 +89,7 @@ object Clustering {
         round += 1
       }
       cents
-    })
+    }
   }
 
   /** Nearest-centroid assignment over a broadcast (cid, cv, cnrm)

@@ -252,29 +252,19 @@ object Dedup {
     * sf0.1 six such buckets held 83% of all candidate pairs), and the
     * distinct candidate pairs — one definition for verifier, estimator,
     * and clusterer so the LSH parameters cannot drift apart.
-    */
-  /** One cached (shingles+signatures, candidate pairs) pipeline per
+    *
+    * One cached (shingles+signatures, candidate pairs) pipeline per
     * (session, dir), shared by the four minhash-family queries
     * (verifier, estimator, containment, clusterer) — the banding window +
     * self-join + distinct is the expensive stage and is identical for all
-    * of them, so repeated invocations reuse one materialization (Spark
-    * evicts it LRU under pressure).
+    * of them, so repeated invocations reuse one materialization (the
+    * frame-cache budget evicts it under pressure).
     */
-  private val lshCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  /** Force a full clear from test teardown so recycled sessions don't pin
-    * DataFrames for the JVM lifetime (stopped-session and stale-fingerprint
-    * purging happens in Tables.freshCacheKey on every access).
-    */
-  def clearHsCache(): Unit = lshCache.clear()
-
   private def lshCandidates(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     graft.functions.MinHashSig.register(spark)
     graft.functions.TextHashes.register(spark)
-    val (sigs, cand) = lshCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(lshCache, spark, dir, "documents"), {
+    val (sigs, cand) = graft.FrameCache.get(spark, dir, "documents", "Dedup.lsh") {
       val s = t(spark, dir, "documents")
         .filter(length(col("text")) >= 5)
         .select(col("doc_id"), expr("gram_hashes(text, 5, 2147483647)").as("hs"))
@@ -283,7 +273,7 @@ object Dedup {
         // precedent): evictable under the budget, no object-graph pin
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       (s, bandPairs(s).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    })
+    }
     (sigs.select("doc_id", "hs"), sigs, cand)
   }
 
@@ -652,11 +642,13 @@ object Dedup {
     * fixpoint (the standard large-scale connected-components loop — each
     * round is one broadcast join, and rounds are logarithmic in component
     * diameter). cluster_id = smallest doc_id in the component, i.e. the
-    * document a "keep one per cluster" pass retains.
+    * document a "keep one per cluster" pass retains. The labels are cached
+    * per (session, data fingerprint) — dedup_clusters, curation_pipeline
+    * and curation_report all consume this frame, so the iterative
+    * components loop runs once, not per query.
     */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(clustersCache, spark, dir, "documents"),
+    graft.FrameCache.get(spark, dir, "documents", "Dedup.clusters")(
       components(dedupMinhashLsh(spark, dir).select("d1", "d2"))
         .localCheckpoint())
 
@@ -763,17 +755,6 @@ object Dedup {
         expr("(10000 * (n_docs - n_dropped)) div n_docs"))
   }
 
-  /** The converged cluster labels, cached per (session, data fingerprint)
-    * — dedup_clusters, curation_pipeline and curation_report all consume
-    * this frame, so the iterative components loop runs once, not per
-    * query (the knn edge-frame / media_phash discipline).
-    */
-  private val clustersCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Explicit teardown hook, mirroring [[clearHsCache]]. */
-  def clearClustersCache(): Unit = clustersCache.clear()
-
   /** Connected components over an undirected pair set `(d1, d2)` via
     * min-label propagation with pointer jumping, iterated to fixpoint —
     * the standard large-scale CC loop (each round is one shuffle join;
@@ -854,22 +835,6 @@ object Dedup {
     */
   private[graft] val BenchSplitMod = 50L
 
-  /** The (keyed benchmark gram frame, positioned hit-pair frame) pair,
-    * cached per (session, data fingerprint). The hit-pair frame
-    * `(gram, doc_id, n_toks, pos, bench_doc)` is the FULL contamination
-    * evidence — one row per (train gram occurrence, benchmark doc
-    * sharing it) — so decontaminate (per-train-doc), benchmark_leakage
-    * (per-eval-item), contamination_spans (per-position), the report,
-    * and the streaming screen's static set all derive from ONE train
-    * scan per data generation instead of one each. The cached footprint
-    * is contamination-sized (hits only), never token-scale.
-    */
-  private val decontamCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  /** Explicit teardown hook, mirroring [[clearHsCache]]. */
-  def clearDecontamCache(): Unit = decontamCache.clear()
-
   /** The uncached (keyed benchmark grams, hit-pair frame) build —
     * separated from the cache wrapper so PlanShapeSpec can pin the
     * broadcast-gram join shape without an InMemoryRelation hiding it.
@@ -890,13 +855,22 @@ object Dedup {
     (bgk, train.join(broadcast(bgk), "gram"))
   }
 
+  /** The (keyed benchmark gram frame, positioned hit-pair frame) pair,
+    * cached per (session, data fingerprint). The hit-pair frame
+    * `(gram, doc_id, n_toks, pos, bench_doc)` is the FULL contamination
+    * evidence — one row per (train gram occurrence, benchmark doc
+    * sharing it) — so decontaminate (per-train-doc), benchmark_leakage
+    * (per-eval-item), contamination_spans (per-position), the report,
+    * and the streaming screen's static set all derive from ONE train
+    * scan per data generation instead of one each. The cached footprint
+    * is contamination-sized (hits only), never token-scale.
+    */
   private def decontamFrames(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    decontamCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(decontamCache, spark, dir, "documents"), {
-        val (bgk, hitPairs) = decontamBuild(spark, dir)
-        (bgk.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER), hitPairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-      })
+    graft.FrameCache.get(spark, dir, "documents", "Dedup.decontam") {
+      val (bgk, hitPairs) = decontamBuild(spark, dir)
+      (bgk.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER), hitPairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    }
 
   /** The distinct benchmark gram set (every 50th doc of the at-rest
     * corpus) — broadcast into both the batch and streaming screens.

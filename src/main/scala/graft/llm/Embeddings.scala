@@ -10,19 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * The projection (float->double transform + norm) is cached per
   * (session, dir): five queries consume it, and re-reading the parquet +
-  * re-allocating the arrays dominated their runtime. Entries for stopped
-  * sessions are purged on access.
+  * re-allocating the arrays dominated their runtime.
   */
 object Embeddings {
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  def clearCache(): Unit = cache.clear()
-
   def withNorm(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecDot.register(spark)
-    cache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(cache, spark, dir, "embeddings"),
+    graft.FrameCache.get(spark, dir, "embeddings", "Embeddings.withNorm")(
       t(spark, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

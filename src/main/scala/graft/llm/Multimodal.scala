@@ -353,18 +353,14 @@ object Multimodal {
       |  b -> struct(b as band,
       |    shiftright(phash, 16 * b) & 65535 as bv))""".stripMargin
 
-  private val phashCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The decoded-and-hashed signature frame (doc_id, phash, width,
     * height), computed once per (session, data fingerprint) and
     * localCheckpoint'ed — [[mediaPhash]] and [[phashHammingPairs]] both
     * consume it, so the per-doc codec round-trips are paid once, not per
-    * query (the Embeddings/fitCache discipline).
+    * query (the Embeddings / k-means fit discipline).
     */
   private def phashFrame(spark: SparkSession, dir: String): DataFrame =
-    phashCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(phashCache, spark, dir, "documents"),
+    graft.FrameCache.get(spark, dir, "documents", "Multimodal.phash")(
       buildPhashFrame(spark, dir).localCheckpoint())
 
   /** The uncached decode+hash pass — private[graft] so MultimodalSpec can

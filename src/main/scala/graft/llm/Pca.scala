@@ -1,7 +1,5 @@
 package graft.llm
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -119,27 +117,18 @@ object Pca {
     def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
   }
 
-  private val fitCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val secondCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val momentsCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearCache(): Unit = {
-    fitCache.clear(); secondCache.clear(); momentsCache.clear()
-  }
-
   /** The single data-sized pass, fingerprint-cached: the posexploded
     * (d^2+d+1)-row integer moment frame both components derive from.
     */
   private def moments(spark: SparkSession, dir: String): DataFrame =
-    momentsCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(momentsCache, spark, dir, "embeddings"), {
-        val agg = udaf(new IntMomentAgg(Dim), ExpressionEncoder[Seq[Double]]())
-        Embeddings.withNorm(spark, dir)
-          .agg(agg(col("v")).as("m"))
-          .select(posexplode(col("m")).as(Seq("idx", "mv")))
-          .select(col("idx").cast("long").as("idx"), col("mv"))
-          .localCheckpoint()
-      })
+    graft.FrameCache.get(spark, dir, "embeddings", "Pca.moments") {
+      val agg = udaf(new IntMomentAgg(Dim), ExpressionEncoder[Seq[Double]]())
+      Embeddings.withNorm(spark, dir)
+        .agg(agg(col("v")).as("m"))
+        .select(posexplode(col("m")).as(Seq("idx", "mv")))
+        .select(col("idx").cast("long").as("idx"), col("mv"))
+        .localCheckpoint()
+    }
 
   /** The 1-row corpus-size frame from the cached moments. */
   private def nOf(m: DataFrame): DataFrame =
@@ -261,27 +250,26 @@ object Pca {
     * DuckDB oracle — the eigensolve is integer arithmetic end to end.
     */
   def pcaTopComponent(spark: SparkSession, dir: String): DataFrame =
-    fitCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(fitCache, spark, dir, "embeddings"), {
-        val m = moments(spark, dir)
-        val n = nOf(m)
-        val cn = rescaled(covOf(m)).localCheckpoint()
-        val v = principal(cn)
-        val num = quadForm(cn, v)
-        val den = sumSq(v)
-        val trace = cn.filter(col("i") === col("j"))
-          .agg(greatest(sum("c"), lit(1L)).as("tr"))
-        v.crossJoin(broadcast(num))
-          .crossJoin(broadcast(den))
-          .crossJoin(broadcast(trace))
-          .crossJoin(broadcast(n))
-          .select(col("i").as("dim"), col("w").as("component_fp"),
-            expr(tdiv("num", "den")).as("eigenvalue_fp"),
-            expr(tdiv(s"${tdiv("num", "den")} * $Ppb", "tr"))
-              .as("explained_ppb"),
-            col("n").as("n_vecs"))
-          .localCheckpoint()
-      })
+    graft.FrameCache.get(spark, dir, "embeddings", "Pca.fit") {
+      val m = moments(spark, dir)
+      val n = nOf(m)
+      val cn = rescaled(covOf(m)).localCheckpoint()
+      val v = principal(cn)
+      val num = quadForm(cn, v)
+      val den = sumSq(v)
+      val trace = cn.filter(col("i") === col("j"))
+        .agg(greatest(sum("c"), lit(1L)).as("tr"))
+      v.crossJoin(broadcast(num))
+        .crossJoin(broadcast(den))
+        .crossJoin(broadcast(trace))
+        .crossJoin(broadcast(n))
+        .select(col("i").as("dim"), col("w").as("component_fp"),
+          expr(tdiv("num", "den")).as("eigenvalue_fp"),
+          expr(tdiv(s"${tdiv("num", "den")} * $Ppb", "tr"))
+            .as("explained_ppb"),
+          col("n").as("n_vecs"))
+        .localCheckpoint()
+    }
 
   /** Second principal component by integer deflation: the same squaring
     * eigensolve run on C2·F = Cn·F − TDIV(num·t, den) with
@@ -297,46 +285,45 @@ object Pca {
     * aggregation. Hash-exact vs the DuckDB oracle.
     */
   def pcaSecondComponent(spark: SparkSession, dir: String): DataFrame =
-    secondCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(secondCache, spark, dir, "embeddings"), {
-        val m = moments(spark, dir)
-        val n = nOf(m)
-        val cn = rescaled(covOf(m)).localCheckpoint()
-        val top = pcaTopComponent(spark, dir)
-        val v1 = top.select(col("dim").as("i"), col("component_fp").as("w"))
-        val lam1 = top.agg(max("eigenvalue_fp").as("lam1"))
-        val num1 = quadForm(cn, v1)
-        val den1 = sumSq(v1)
-        val cov2 = cn
-          .join(broadcast(v1.select(col("i"), col("w").as("w1i"))), "i")
-          .join(broadcast(v1.select(col("i").as("j"), col("w").as("w1j"))),
-            "j")
-          .crossJoin(broadcast(num1))
-          .crossJoin(broadcast(den1))
-          .select(col("i"), col("j"),
-            (col("c") * lit(F) -
-              expr(tdiv(s"num * ${tdiv(s"w1i * w1j * $F", "den")}", "den")))
-              .as("c"))
-          .localCheckpoint()
-        val v2 = principal(rescaled(cov2).localCheckpoint())
-        val num2 = quadForm(cn, v2)
-        val den2 = sumSq(v2)
-        val trace = cn.filter(col("i") === col("j"))
-          .agg(greatest(sum("c"), lit(1L)).as("tr"))
-        v2.crossJoin(broadcast(num2))
-          .crossJoin(broadcast(den2))
-          .crossJoin(broadcast(lam1))
-          .crossJoin(broadcast(trace))
-          .crossJoin(broadcast(n))
-          .select(col("i").as("dim"), col("w").as("component_fp"),
-            expr(tdiv("num", "den")).as("eigenvalue_fp"),
-            expr(tdiv(s"${tdiv("num", "den")} * $Ppb", "tr"))
-              .as("explained_ppb"),
-            expr(tdiv(s"(lam1 + ${tdiv("num", "den")}) * $Ppb", "tr"))
-              .as("cum_explained_ppb"),
-            col("n").as("n_vecs"))
-          .localCheckpoint()
-      })
+    graft.FrameCache.get(spark, dir, "embeddings", "Pca.second") {
+      val m = moments(spark, dir)
+      val n = nOf(m)
+      val cn = rescaled(covOf(m)).localCheckpoint()
+      val top = pcaTopComponent(spark, dir)
+      val v1 = top.select(col("dim").as("i"), col("component_fp").as("w"))
+      val lam1 = top.agg(max("eigenvalue_fp").as("lam1"))
+      val num1 = quadForm(cn, v1)
+      val den1 = sumSq(v1)
+      val cov2 = cn
+        .join(broadcast(v1.select(col("i"), col("w").as("w1i"))), "i")
+        .join(broadcast(v1.select(col("i").as("j"), col("w").as("w1j"))),
+          "j")
+        .crossJoin(broadcast(num1))
+        .crossJoin(broadcast(den1))
+        .select(col("i"), col("j"),
+          (col("c") * lit(F) -
+            expr(tdiv(s"num * ${tdiv(s"w1i * w1j * $F", "den")}", "den")))
+            .as("c"))
+        .localCheckpoint()
+      val v2 = principal(rescaled(cov2).localCheckpoint())
+      val num2 = quadForm(cn, v2)
+      val den2 = sumSq(v2)
+      val trace = cn.filter(col("i") === col("j"))
+        .agg(greatest(sum("c"), lit(1L)).as("tr"))
+      v2.crossJoin(broadcast(num2))
+        .crossJoin(broadcast(den2))
+        .crossJoin(broadcast(lam1))
+        .crossJoin(broadcast(trace))
+        .crossJoin(broadcast(n))
+        .select(col("i").as("dim"), col("w").as("component_fp"),
+          expr(tdiv("num", "den")).as("eigenvalue_fp"),
+          expr(tdiv(s"${tdiv("num", "den")} * $Ppb", "tr"))
+            .as("explained_ppb"),
+          expr(tdiv(s"(lam1 + ${tdiv("num", "den")}) * $Ppb", "tr"))
+            .as("cum_explained_ppb"),
+          col("n").as("n_vecs"))
+        .localCheckpoint()
+    }
 
   /** The quantized corpus: (vec_id, label, qv array<bigint>) — the same
     * floor(x·S + 0.5) quantization the moment pass applies in-row.

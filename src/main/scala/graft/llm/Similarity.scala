@@ -191,12 +191,6 @@ object Similarity {
   private[graft] def servingIndex(spark: SparkSession, dir: String): DataFrame =
     ivfCells(spark, dir)
 
-  private val ivfAssignCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Explicit teardown hook for the IVF assignment cache. */
-  def clearIvfAssignCache(): Unit = ivfAssignCache.clear()
-
   /** The coarse cell assignment `(vec_id, cell)`, fingerprint-cached per
     * (session, data) — the whole IVF family (annIvf, nprobe2, cell
     * balance, recall curve, IVFPQ, semPairs, knn candidates) keys on
@@ -206,18 +200,17 @@ object Similarity {
     * need the raw vectors re-join them lazily ([[ivfCells]]).
     */
   private[llm] def ivfAssign(spark: SparkSession, dir: String): DataFrame =
-    ivfAssignCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(ivfAssignCache, spark, dir, "embeddings"), {
-        val vecs = vectors(spark, dir)
-        val cents = Clustering.fittedCentroids(spark, dir)
-          .select(col("cid"), col("cv"), col("cnrm"))
-        // One shared assignment definition (Clustering.nearestCentroid) -
-        // the max_by partial-aggregation shape and the (ccos DESC, cid ASC)
-        // tie-break are load-bearing for both shuffle size and oracle parity.
-        Clustering.nearestCentroid(vecs, cents)
-          .select(col("vec_id"), col("cid").as("cell"))
-          .localCheckpoint()
-      })
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.ivfAssign") {
+      val vecs = vectors(spark, dir)
+      val cents = Clustering.fittedCentroids(spark, dir)
+        .select(col("cid"), col("cv"), col("cnrm"))
+      // One shared assignment definition (Clustering.nearestCentroid) -
+      // the max_by partial-aggregation shape and the (ccos DESC, cid ASC)
+      // tie-break are load-bearing for both shuffle size and oracle parity.
+      Clustering.nearestCentroid(vecs, cents)
+        .select(col("vec_id"), col("cid").as("cell"))
+        .localCheckpoint()
+    }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val cells = ivfCells(spark, dir)
@@ -354,12 +347,8 @@ object Similarity {
     * footprint scales linearly and both consumers ride one pair pass.
     */
   private def semPairs(spark: SparkSession, dir: String): DataFrame =
-    semPairsCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(semPairsCache, spark, dir, "embeddings"),
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.semPairs")(
       buildSemPairs(spark, dir).localCheckpoint())
-
-  private val semPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   private def buildSemPairs(spark: SparkSession, dir: String): DataFrame = {
     val cells = ivfCells(spark, dir)
@@ -530,21 +519,6 @@ object Similarity {
 
   private val PqQ = 1000000L
 
-  /** Explicit teardown hook, mirroring Dedup.clearHsCache (stopped-
-    * session and stale-fingerprint purging happens in freshCacheKey on
-    * every access; this forces a full release).
-    */
-  def clearPqCache(): Unit = { pqCache.clear(); pqCodesCache.clear() }
-
-  /** Explicit teardown hook for the semantic-dedup pair frame. */
-  def clearSemPairsCache(): Unit = semPairsCache.clear()
-
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private val pqCodesCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The encoded index itself: per-vector PQ code assignment
     * `(vec_id, s, code)` against the fitted [[pqCodebook]], fingerprint-
     * cached per (session, data) with the knn-edge discipline. [[annPq]]
@@ -557,8 +531,7 @@ object Similarity {
     * cached footprint is a fraction of the input at any corpus size.
     */
   private[llm] def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    pqCodesCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(pqCodesCache, spark, dir, "embeddings"),
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.pqCodes")(
       subSlices(spark, dir)
         .join(broadcast(pqCodebook(spark, dir)), "s")
         .withColumn("d2q", expr(pqD2q))
@@ -625,8 +598,7 @@ object Similarity {
     * the same number of passes as a single k-means. Returns (s, cid, cv).
     */
   private[llm] def pqCodebook(spark: SparkSession, dir: String): DataFrame = {
-    pqCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(pqCache, spark, dir, "embeddings"), {
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.pq") {
       val subs = subSlices(spark, dir)
       var cents = subs.filter(col("vec_id") < 16)
         .select(col("s"), col("vec_id").as("cid"), col("sv").as("cv"))
@@ -657,7 +629,7 @@ object Similarity {
         round += 1
       }
       cents
-    })
+    }
   }
 
   /** Product-quantization ANN — the codebook compression real vector
@@ -780,15 +752,8 @@ object Similarity {
   /** Exact top-3 for the vec_id 100-108 query set (the PQ-family query
     * range; the <8 range's exact top-3 comes from [[annBruteforce]]).
     */
-  private val exact3Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Explicit teardown hook for the exact-top-3 ground-truth cache. */
-  def clearExact3Cache(): Unit = exact3Cache.clear()
-
   private def exact3HighRange(spark: SparkSession, dir: String): DataFrame =
-    exact3Cache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(exact3Cache, spark, dir, "embeddings"),
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.exact3")(
       buildExact3HighRange(spark, dir).localCheckpoint())
 
   /** The exact-cosine ground truth is one brute-force pass over the
@@ -924,22 +889,11 @@ object Similarity {
     * The edge frame is computed once per (session, data fingerprint) and
     * localCheckpoint'ed — [[knnDegree]] and [[knnClusters]] consume the
     * same frame, so candidate generation is paid once, not per query
-    * (the media_phash / Embeddings / fitCache discipline).
+    * (the media_phash / Embeddings / k-means fit discipline).
     */
   def knnGraph(spark: SparkSession, dir: String): DataFrame =
-    knnCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(knnCache, spark, dir, "embeddings"),
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.knn")(
       buildKnnGraph(spark, dir).localCheckpoint())
-
-  private val knnCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Explicit teardown hook for the knn family (edge frame + converged
-    * cluster labels), mirroring [[clearPqCache]].
-    */
-  def clearKnnCache(): Unit = {
-    knnCache.clear(); knnClustersCache.clear(); snnClustersCache.clear()
-  }
 
   /** The uncached candidate-generation chain — private[graft] so
     * PlanShapeSpec pins the (cell, sub) join shape of the BUILD (the
@@ -1069,8 +1023,7 @@ object Similarity {
     * join touches at most 3n edges regardless of corpus size.
     */
   def knnClusters(spark: SparkSession, dir: String): DataFrame =
-    knnClustersCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(knnClustersCache, spark, dir, "embeddings"),
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.knnClusters")(
       Dedup.components(
         knnGraph(spark, dir).filter(col("cos") >= 0.25)
           .select(least(col("q_id"), col("n_id")).as("d1"),
@@ -1078,13 +1031,6 @@ object Similarity {
           .distinct())
         .select(col("doc_id").as("vec_id"), col("cluster_id"))
         .localCheckpoint())
-
-  /** Converged component labels cached per (session, data fingerprint) —
-    * the Dedup.dedupClusters discipline: the iterative loop runs once per
-    * data generation, not per query.
-    */
-  private val knnClustersCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** Embedding-column data-quality gate: per label the vector count,
     * dimension, and nearest-rank norm quartiles — the first check before
@@ -1407,8 +1353,7 @@ object Similarity {
     * fingerprint-cached like [[knnClusters]].
     */
   def snnClusters(spark: SparkSession, dir: String): DataFrame =
-    snnClustersCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(snnClustersCache, spark, dir, "embeddings"),
+    graft.FrameCache.get(spark, dir, "embeddings", "Similarity.snnClusters")(
       Dedup.components(
         knnGraph(spark, dir)
           .groupBy(least(col("q_id"), col("n_id")).as("d1"),
@@ -1420,9 +1365,6 @@ object Similarity {
           .select("d1", "d2"))
         .select(col("doc_id").as("vec_id"), col("cluster_id"))
         .localCheckpoint())
-
-  private val snnClustersCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
 
   /** Deterministic 2-step random walks over the cached knn graph — the
     * skip-gram-style POSITIVE-pair generator for contrastive training

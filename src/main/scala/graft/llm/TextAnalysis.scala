@@ -492,18 +492,14 @@ object TextAnalysis {
     * Spark and DuckDB, so sequences stay bit-identical; the winner pick is
     * a global (n DESC, pair ASC) top-1 (TakeOrderedAndProject — no full
     * sort materialized).
-    */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** The trained merge table, fingerprint-cached per (session, data) —
+    *
+    * The trained merge table is fingerprint-cached per (session, data) —
     * [[bpeMerges]] and [[bpeEncode]] share one trainer run (the PQ
     * codebook-cache discipline); each round's winner is already
     * localCheckpoint'ed, so the cached frame is 3 tiny checkpointed rows.
     */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    mergeCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(mergeCache, spark, dir, "documents"),
+    graft.FrameCache.get(spark, dir, "documents", "TextAnalysis.merge")(
       trainBpeMerges(spark, dir))
 
   private def trainBpeMerges(spark: SparkSession, dir: String): DataFrame = {
@@ -567,17 +563,8 @@ object TextAnalysis {
     * same footprint class as the cached dedup/knn label frames.
     */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame =
-    encodeCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(encodeCache, spark, dir, "documents"),
+    graft.FrameCache.get(spark, dir, "documents", "TextAnalysis.encode")(
       buildBpeEncode(spark, dir).localCheckpoint())
-
-  private val encodeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Explicit teardown hook (the Dedup.clearHsCache discipline) for the
-    * BPE trainer and per-doc encode caches.
-    */
-  def clearBpeCache(): Unit = { mergeCache.clear(); encodeCache.clear() }
 
   /** The (doc_id, word) corpus fan — the one word-splitting spelling
     * shared by the encode paths.
@@ -1262,8 +1249,8 @@ object TextAnalysis {
     * The df table is vocabulary-sized, so the join broadcasts; per-doc
     * term frequencies come from the in-row array_counts combiner (one
     * generator row per DISTINCT token per doc).
-    */
-  /** Per-doc corpus-frequency score, fingerprint-cached per (session,
+    *
+    * The per-doc corpus-frequency score is fingerprint-cached per (session,
     * data) — the [[bpeEncode]] per-doc accounting discipline. FOUR
     * registry queries consume this frame (gram_likelihood itself,
     * likelihood_quartiles, quality_length_matrix, quality_by_dup) and
@@ -1272,12 +1259,8 @@ object TextAnalysis {
     * df-join subtree before caching); the cached form is one 4-column
     * row per doc, the same footprint class as the encode cache.
     */
-  private val glCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   def gramLikelihood(spark: SparkSession, dir: String): DataFrame =
-    glCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(glCache, spark, dir, "documents"),
+    graft.FrameCache.get(spark, dir, "documents", "TextAnalysis.gl")(
       buildGramLikelihood(spark, dir).localCheckpoint())
 
   private def buildGramLikelihood(spark: SparkSession, dir: String): DataFrame = {

@@ -415,12 +415,6 @@ object BrokerOps {
     * shape fetch_wait/delayed_produce pay), a window over that
     * seconds-grain frame (not the data), and two metadata rollups.
     */
-  private val secsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  /** Explicit teardown hook for the seconds-grain purgatory frame. */
-  def clearSecsCache(): Unit = secsCache.clear()
-
   def purgatoryWatchers(spark: SparkSession, dir: String): DataFrame = {
     // (topic, part, sec) is time-bounded metadata; fingerprint-cached +
     // checkpointed (the anomalyMinuteCounts discipline) so the Produce
@@ -428,8 +422,7 @@ object BrokerOps {
     // (session, data) instead of once per call — the per-call checkpoint
     // was the query's dominant steady cost (plan ~1.1 s/pass). logBase,
     // not log: no column here needs the offset window.
-    val secs = secsCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(secsCache, spark, dir, "events"),
+    val secs = graft.FrameCache.get(spark, dir, "events", "BrokerOps.secs")(
       LogOps.logBase(spark, dir)
         .withColumn("sec", expr("tms div 1000"))
         .groupBy("topic", "part", "sec")

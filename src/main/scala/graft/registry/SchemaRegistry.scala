@@ -136,15 +136,8 @@ object SchemaRegistry {
     * build per data generation, every registry view reads the
     * materialized ~metadata-sized frame.
     */
-  private val tvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Explicit teardown hook (the Dedup.clearHsCache discipline). */
-  def clearTvfCache(): Unit = tvfCache.clear()
-
   private def typedVersionedFields(spark: SparkSession, dir: String): DataFrame =
-    tvfCache.getOrElseUpdate(
-      graft.Tables.freshCacheKey(tvfCache, spark, dir, "events"),
+    graft.FrameCache.get(spark, dir, "events", "SchemaRegistry.tvf")(
       typedVersionedFieldsBuild(spark, dir).cache())
 
   /** Per-(topic, field) presence flags AND declared types for the three

@@ -12,12 +12,12 @@ import org.apache.spark.sql.functions._
   * (/root/reference/kafka-impl/.../format/EntryFormatter.java) and ledger
   * layout (storage/PartitionLog.java): one directory per (topic, part),
   * segment files of length-prefixed record batches (magic, count, base
-  * offset, then per record offset-delta / timestamp / event id / framed
-  * key / framed value).
+  * offset, max timestamp, max offset, then per record offset-delta /
+  * timestamp / event id / framed key / framed value).
   *
   * The layout IS the index: topic/part predicates prune whole directories
   * before a byte is read, and each batch's header carries enough (base
-  * offset + count) to skip it on an offset lower bound without decoding
+  * and max offset) to skip it on an offset bound without decoding
   * records — exactly how the reference's fetch path seeks by offset.
   * [[GlogSource]] exposes it to Spark as a DataSource V2 table.
   */
@@ -31,7 +31,21 @@ object Glog {
     * exactly like the offset skip.
     */
   val MagicT: Byte = 4
+  /** v5 header adds the batch's max offset. Offsets inside a batch need
+    * not be dense — a compacted store keeps each surviving record at its
+    * original offset — so base + count is not a bound on them; the offset
+    * skip and [[endOffset]] use this field. v3/v4 batches were only ever
+    * written dense: their max offset is base + count - 1.
+    */
+  val MagicO: Byte = 5
   val MaxBatch = 100
+
+  private def headerLen(magic: Byte): Int = magic match {
+    case Magic => 13
+    case MagicT => 21
+    case MagicO => 29
+    case m => throw new IllegalArgumentException(s"bad magic $m")
+  }
 
   final case class Rec(topic: String, part: Long, offs: Long,
       event_id: Long, tms: Long, k: String, v: String)
@@ -59,10 +73,11 @@ object Glog {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     val first = recs.head.offs
-    out.writeByte(MagicT)
+    out.writeByte(MagicO)
     out.writeInt(recs.size)
     out.writeLong(first)
     out.writeLong(recs.iterator.map(_.tms).max)
+    out.writeLong(recs.iterator.map(_.offs).max)
     recs.foreach { r =>
       val delta = r.offs - first
       require(delta >= 0 && delta <= Int.MaxValue, s"bad offset delta $delta")
@@ -108,24 +123,21 @@ object Glog {
           try in.readInt()
           catch { case _: EOFException => return }
         val magic = in.readByte()
-        require(magic == Magic || magic == MagicT, "bad magic")
+        val hLen = headerLen(magic)
         val n = in.readInt()
         val base = in.readLong()
-        // v4 carries the batch's max timestamp; v3 batches cannot be
-        // time-skipped (maxTms = MaxValue keeps them).
-        val maxTms = if (magic == MagicT) in.readLong() else Long.MaxValue
-        val headerLen = if (magic == MagicT) 21 else 13
+        // v3 batches cannot be time-skipped (maxTms = MaxValue keeps them).
+        val maxTms = if (magic == Magic) Long.MaxValue else in.readLong()
+        val maxOffs = if (magic == MagicO) in.readLong() else base + n - 1
         // Header-only skip: the whole batch sits below the requested
-        // offset (max offset in a batch is base + n - 1 because deltas
-        // are dense-ordered within <= MaxBatch records), or every record
-        // in it predates the time lower bound. The body streams past
-        // unbuffered.
-        if (base + n <= fromOffs || base >= untilOffs || maxTms < minTms) {
+        // offset or at/after its upper bound, or every record in it
+        // predates the time lower bound. The body streams past unbuffered.
+        if (maxOffs < fromOffs || base >= untilOffs || maxTms < minTms) {
           batchesSkipped.incrementAndGet()
-          skipFully(in, batchLen - headerLen)
+          skipFully(in, batchLen - hLen)
         } else {
           batchesRead.incrementAndGet()
-          val body = new Array[Byte](batchLen - headerLen)
+          val body = new Array[Byte](batchLen - hLen)
           in.readFully(body)
           val b = new DataInputStream(new java.io.ByteArrayInputStream(body))
           def str(need: Boolean): String = {
@@ -138,14 +150,19 @@ object Glog {
               new String(bs, java.nio.charset.StandardCharsets.UTF_8)
             }
           }
-          cur = (0 until n).iterator.map { _ =>
+          val recs = Array.fill(n) {
             val delta = b.readInt()
             val tms = b.readLong()
             val eid = b.readLong()
             val kk = str(needK)
             val vv = str(needV)
             Rec(topic, part, base + delta, eid, tms, kk, vv)
-          }.filter(r => r.offs >= fromOffs && r.offs < untilOffs).toArray.iterator
+          }
+          // The skip above trusts a v5 header's max offset; a batch whose
+          // records disagree with it is corrupt.
+          require(magic != MagicO || n == 0 ||
+            recs.iterator.map(_.offs).max == maxOffs, "bad batch header")
+          cur = recs.iterator.filter(r => r.offs >= fromOffs && r.offs < untilOffs)
         }
       }
     }
@@ -153,9 +170,10 @@ object Glog {
     def next(): Rec = { advance(); cur.next() }
   }
 
-  /** End offset (exclusive) of one (topic, part) directory: the max
-    * base+count over its segment batch headers — a header-only scan that
-    * skips every payload (the glog analog of a log-end-offset lookup).
+  /** End offset (exclusive) of one (topic, part) directory: one past the
+    * max offset over its segment batch headers — a header-only scan
+    * that skips every payload (the glog analog of a log-end-offset
+    * lookup). On a compacted store this is the max surviving offset + 1.
     */
   def endOffset(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Long = {
@@ -170,13 +188,13 @@ object Glog {
             catch { case _: EOFException => done = true; -1 }
           if (!done) {
             val magic = in.readByte()
-            require(magic == Magic || magic == MagicT, "bad magic")
+            val hLen = headerLen(magic)
             val n = in.readInt()
             val base = in.readLong()
-            end = math.max(end, base + n)
-            // magic/count/base = 13 bytes were read; the rest of the batch
-            // (incl. the v4 maxTms field) is payload to skip.
-            in.skipBytes(batchLen - 13)
+            if (magic != Magic) in.readLong() // maxTms
+            val maxOffs = if (magic == MagicO) in.readLong() else base + n - 1
+            end = math.max(end, maxOffs + 1)
+            skipFully(in, batchLen - hLen)
           }
         }
       } finally in.close()

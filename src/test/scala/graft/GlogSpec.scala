@@ -342,6 +342,27 @@ class GlogSpec extends AnyFunSuite {
       .filter(col("topic") === "click" && col("offs") >= 100L).count()
     val seekWant = want.filter(col("topic") === "click" && col("offs") >= 100L).count()
     assert(seek == seekWant)
+    // the compacted store's end offsets are its max surviving offset + 1
+    val ends = Glog.listEnds(out, spark.sparkContext.hadoopConfiguration)
+    val wantEnds = want.groupBy("topic", "part").agg(max("offs")).collect()
+      .map(r => s"${r.getString(0)}/${r.getLong(1)}" -> (r.getLong(2) + 1L)).toMap
+    assert(ends == wantEnds)
+    // a seek that starts past base + count inside one compacted batch:
+    // 200 records of one partition where every 4th key is unique and the
+    // rest share one key compact to offsets 0, 4, ..., 196 and 199 — one
+    // 51-record batch whose max offset (199) is far above base + count
+    import spark.implicits._
+    val gapsIn = java.nio.file.Files.createTempDirectory("graft_glog_gaps").toString
+    val recs = (0L until 200L).map(i => Glog.Rec("t", 0L, i, 1000L + i,
+      1700000000000L + i, if (i % 4 == 0) s"u$i" else "dup", s"v$i"))
+    Glog.writeSegments(spark.createDataset(recs), gapsIn, "segment-0")
+    val gaps = java.nio.file.Files.createTempDirectory("graft_glog_gaps_c").toString
+    graft.sources.GlogOps.compactStore(spark, gapsIn, gaps)
+    val tail = spark.read.format("glog").load(gaps)
+      .filter(col("offs") >= 150L).select("offs").as[Long].collect().sorted
+    assert(tail.toSeq == ((152L until 200L by 4L) :+ 199L))
+    assert(Glog.listEnds(gaps, spark.sparkContext.hadoopConfiguration) ==
+      Map("t/0" -> 200L))
   }
 
   test("streaming log-end monitor over the glog tail matches batch list_offsets") {

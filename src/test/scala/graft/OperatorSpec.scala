@@ -3136,4 +3136,35 @@ class OperatorSpec extends AnyFunSuite {
     assert(p.agg(sum("n_docs")).head.getLong(0) == n)
     p.unpersist()
   }
+
+  test("customer_spend_deciles ranks a null total last, like NTILE") {
+    // A copy of sf0.001's orders with every order of one customer priced
+    // null, so that customer's total is null.
+    val d = java.nio.file.Files.createTempDirectory("graft_deciles_null")
+    d.toFile.deleteOnExit()
+    val orders = spark.read.parquet(s"$dir/orders.parquet")
+    val victim = orders.agg(min("o_custkey")).head().get(0)
+    orders.withColumn("o_totalprice",
+        when(col("o_custkey") === lit(victim), lit(null))
+          .otherwise(col("o_totalprice")))
+      .coalesce(1).write.parquet(s"$d/orders.parquet")
+    val got = analytics.Analytics.customerSpendDeciles(spark, d.toString)
+    val totals = spark.read.parquet(s"$d/orders.parquet")
+      .groupBy("o_custkey")
+      .agg(sum(col("o_totalprice").cast("decimal(10,2)")).cast("double")
+        .as("total"))
+    assert(totals.filter(col("total").isNull).count() == 1)
+    val want = totals
+      .withColumn("decile", ntile(10).over(org.apache.spark.sql.expressions
+        .Window.orderBy(col("total").asc_nulls_last, col("o_custkey")))
+        .cast("long"))
+      .groupBy("decile")
+      .agg(count(lit(1)).as("n_customers"),
+        min("total").as("min_total"), max("total").as("max_total"),
+        sum(col("total").cast("decimal(18,2)")).cast("double").as("sum_total"))
+    val cols = Seq("decile", "n_customers", "min_total", "max_total", "sum_total")
+    assert(got.select(cols.map(col): _*).collect().toSet ==
+      want.select(cols.map(col): _*).collect().toSet)
+    assert(got.agg(sum("n_customers")).head().getLong(0) == totals.count())
+  }
 }

@@ -14,10 +14,11 @@ import org.apache.spark.sql.SparkSession
   * persisted / localCheckpoint'ed frames that were never unpersisted,
   * saturate the storage pool, and every later data-sized build then runs
   * under eviction churn (basket_lift: 0.8 s steady → 73 s under
-  * pressure). So the slots form one access-ordered LRU, and once the
-  * session's cached bytes (memory + disk) exceed ~30% of the heap — the
-  * unified-memory share storage can hold without execution evicting it —
-  * least-recently-used slots are evicted and released. Recently touched
+  * pressure). So the slots of every session form one access-ordered LRU,
+  * and once the SparkContext's cached bytes (memory + disk) exceed ~30%
+  * of the heap — the unified-memory share storage can hold without
+  * execution evicting it — least-recently-used slots are evicted and
+  * released, whichever session they belong to. Recently touched
   * slots survive: a query's own frames (possibly lineage-truncated
   * localCheckpoints that cannot be recomputed once their blocks drop) must
   * outlive the query. [[pinScope]] makes that airtight for registry
@@ -138,10 +139,13 @@ object FrameCache {
   def enforceBudgetNow(spark: SparkSession): Unit =
     enforceBudget(spark, ignoreWindow = true)
 
-  /** Evict least-recently-used slots of THIS session until its cached
-    * footprint fits the budget (best effort — pinned and window-protected
-    * slots and other sessions' slots are skipped). The poll is one
-    * driver-side block-manager summary, no data touched.
+  /** Evict least-recently-used slots until the cached footprint of
+    * `spark`'s SparkContext fits the budget (best effort — pinned and
+    * window-protected slots are skipped). The footprint counts every
+    * session, so eviction reaches every session's slots too: the slots
+    * of an abandoned `newSession()` go first by age instead of staying
+    * resident while the live session evicts its own.
+    * The poll is one driver-side block-manager summary, no data touched.
     */
   private def enforceBudget(spark: SparkSession,
       ignoreWindow: Boolean = false): Unit = slots.synchronized {
@@ -160,12 +164,12 @@ object FrameCache {
         // Saved by the recency window alone outside any pin scope; log it
         // once per pass so an unscoped >8-deep build chain that would have
         // lost a frame is visible instead of silent.
-        if (!warned && (k.spark eq spark)) {
+        if (!warned) {
           warned = true
           System.err.println(s"[graft-cache] window-protected ${k.label} " +
             s"${k.dir} under budget pressure (unscoped access)")
         }
-      } else if ((ignoreWindow || e.getValue.stamp < minKeep) && (k.spark eq spark)) {
+      } else if (ignoreWindow || e.getValue.stamp < minKeep) {
         it.remove()
         pinned.remove(k)
         release(e.getValue.value)

@@ -97,12 +97,37 @@ object Glog {
     bos.toByteArray
   }
 
+  /** One batch header: the body length after the header, the record
+    * count, the base (= lowest) offset, the max timestamp (Long.MaxValue
+    * for v3, which has none) and the max offset. Only a v5 header carries
+    * the max offset; for v3/v4 it is Long.MaxValue, unknown, because a
+    * store compacted before v5 wrote gapped v4 batches whose offsets run
+    * past base + count.
+    */
+  private final case class Header(magic: Byte, bodyLen: Int, n: Int,
+      base: Long, maxTms: Long, maxOffs: Long)
+
+  /** The next batch header off the stream, or None at its end. */
+  private def nextHeader(in: DataInputStream): Option[Header] = {
+    val batchLen =
+      try in.readInt()
+      catch { case _: EOFException => return None }
+    val magic = in.readByte()
+    val bodyLen = batchLen - headerLen(magic)
+    val n = in.readInt()
+    val base = in.readLong()
+    val maxTms = if (magic == Magic) Long.MaxValue else in.readLong()
+    val maxOffs = if (magic == MagicO) in.readLong() else Long.MaxValue
+    Some(Header(magic, bodyLen, n, base, maxTms, maxOffs))
+  }
+
   /** Iterate a segment stream's records; batches entirely below `fromOffs`
     * or at/after `untilOffs` are skipped from their headers without
     * decoding (or even buffering) the records — the header is read off the
     * stream and the body is `skip`ped, so an offset/time seek never copies
     * payload bytes (the [from, until) window is how a micro-batch reads
-    * its slice).
+    * its slice). A v3/v4 batch has no max offset in its header, so the
+    * lower-bound skip does not apply to it: it is decoded and filtered.
     *
     * `needK` / `needV` thread the scan's column pruning down to the codec:
     * a projection that reads neither key nor value (a count, an offset
@@ -119,25 +144,19 @@ object Glog {
     private var cur: Iterator[Rec] = Iterator.empty
     private def advance(): Unit = {
       while (!cur.hasNext) {
-        val batchLen =
-          try in.readInt()
-          catch { case _: EOFException => return }
-        val magic = in.readByte()
-        val hLen = headerLen(magic)
-        val n = in.readInt()
-        val base = in.readLong()
-        // v3 batches cannot be time-skipped (maxTms = MaxValue keeps them).
-        val maxTms = if (magic == Magic) Long.MaxValue else in.readLong()
-        val maxOffs = if (magic == MagicO) in.readLong() else base + n - 1
+        val h = nextHeader(in) match {
+          case Some(h) => h
+          case None => return
+        }
         // Header-only skip: the whole batch sits below the requested
         // offset or at/after its upper bound, or every record in it
         // predates the time lower bound. The body streams past unbuffered.
-        if (maxOffs < fromOffs || base >= untilOffs || maxTms < minTms) {
+        if (h.maxOffs < fromOffs || h.base >= untilOffs || h.maxTms < minTms) {
           batchesSkipped.incrementAndGet()
-          skipFully(in, batchLen - hLen)
+          skipFully(in, h.bodyLen)
         } else {
           batchesRead.incrementAndGet()
-          val body = new Array[Byte](batchLen - hLen)
+          val body = new Array[Byte](h.bodyLen)
           in.readFully(body)
           val b = new DataInputStream(new java.io.ByteArrayInputStream(body))
           def str(need: Boolean): String = {
@@ -150,18 +169,18 @@ object Glog {
               new String(bs, java.nio.charset.StandardCharsets.UTF_8)
             }
           }
-          val recs = Array.fill(n) {
+          val recs = Array.fill(h.n) {
             val delta = b.readInt()
             val tms = b.readLong()
             val eid = b.readLong()
             val kk = str(needK)
             val vv = str(needV)
-            Rec(topic, part, base + delta, eid, tms, kk, vv)
+            Rec(topic, part, h.base + delta, eid, tms, kk, vv)
           }
           // The skip above trusts a v5 header's max offset; a batch whose
           // records disagree with it is corrupt.
-          require(magic != MagicO || n == 0 ||
-            recs.iterator.map(_.offs).max == maxOffs, "bad batch header")
+          require(h.magic != MagicO || h.n == 0 ||
+            recs.iterator.map(_.offs).max == h.maxOffs, "bad batch header")
           cur = recs.iterator.filter(r => r.offs >= fromOffs && r.offs < untilOffs)
         }
       }
@@ -173,34 +192,57 @@ object Glog {
   /** End offset (exclusive) of one (topic, part) directory: one past the
     * max offset over its segment batch headers — a header-only scan
     * that skips every payload (the glog analog of a log-end-offset
-    * lookup). On a compacted store this is the max surviving offset + 1.
+    * lookup). A v3/v4 batch has no max offset in its header; its record
+    * offset deltas are walked instead, payloads still skipped. On a
+    * compacted store this is the max surviving offset + 1.
     */
   def endOffset(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Long = {
     var end = 0L
-    fs.listStatus(dir).filter(_.getPath.getName.endsWith(".glog")).foreach { seg =>
+    segmentFiles(fs, dir).foreach { seg =>
       val in = new DataInputStream(fs.open(seg.getPath))
       try {
-        var done = false
-        while (!done) {
-          val batchLen =
-            try in.readInt()
-            catch { case _: EOFException => done = true; -1 }
-          if (!done) {
-            val magic = in.readByte()
-            val hLen = headerLen(magic)
-            val n = in.readInt()
-            val base = in.readLong()
-            if (magic != Magic) in.readLong() // maxTms
-            val maxOffs = if (magic == MagicO) in.readLong() else base + n - 1
-            end = math.max(end, maxOffs + 1)
-            skipFully(in, batchLen - hLen)
-          }
+        var h = nextHeader(in)
+        while (h.isDefined) {
+          val hd = h.get
+          val maxOffs =
+            if (hd.magic == MagicO) { skipFully(in, hd.bodyLen); hd.maxOffs }
+            else {
+              var mx = hd.base - 1
+              for (_ <- 0 until hd.n) {
+                mx = math.max(mx, hd.base + in.readInt())
+                skipFully(in, 16) // tms, event id
+                for (_ <- 0 to 1) skipFully(in, math.max(in.readInt(), 0))
+              }
+              mx
+            }
+          end = math.max(end, maxOffs + 1)
+          h = nextHeader(in)
         }
       } finally in.close()
     }
     end
   }
+
+  /** The segment files of one (topic, part) directory: every `*.glog`
+    * (not `.glogx` sidecars, not in-flight `.*.tmp-*` files).
+    */
+  def segmentFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".glog"))
+
+  /** The `topic=<t>/part=<p>` directories of a store, as (topic, part,
+    * directory). The store root must exist.
+    */
+  def partitionDirs(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[(String, String, org.apache.hadoop.fs.Path)] =
+    for {
+      tDir <- fs.listStatus(root).toSeq
+      if tDir.isDirectory && tDir.getPath.getName.startsWith("topic=")
+      pDir <- fs.listStatus(tDir.getPath).toSeq
+      if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
+    } yield (tDir.getPath.getName.stripPrefix("topic="),
+      pDir.getPath.getName.stripPrefix("part="), pDir.getPath)
 
   /** Segment-stats sidecar (`<segment>.glogx`, "v1 minOffs maxOffs
     * maxTms") — the segment-level index over the batch-level header
@@ -264,14 +306,9 @@ object Glog {
       s"glog topic name not storable as a directory: '$topic'")
 
   /** Executor-side segment writer: one shuffle onto (topic, part),
-    * offset-sorted batching, segments written through the Hadoop
-    * FileSystem API (works on any FS; no driver involvement).
-    *
-    * Commit protocol: each task writes to a task-attempt-unique hidden temp
-    * file and renames it into place on success, so a speculative or zombie
-    * duplicate attempt can never interleave bytes with the winner — the
-    * same staging+commit discipline Spark's file sources use. Readers only
-    * see `*.glog`, never the in-flight `.*.tmp-*` files.
+    * offset-sorted, then one [[writeSegment]] per (topic, part) — segments
+    * written through the Hadoop FileSystem API (works on any FS; no
+    * driver involvement).
     */
   def writeSegments(ds: org.apache.spark.sql.Dataset[Rec], outPath: String,
       segName: String): Unit = {
@@ -281,59 +318,77 @@ object Glog {
     ds.repartition(col("topic"), col("part"))
       .sortWithinPartitions("topic", "part", "offs")
       .foreachPartition { (it: Iterator[Rec]) =>
-        val conf = hconf.value
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(tc => s"${tc.stageId()}-${tc.taskAttemptId()}")
-          .getOrElse("driver")
         val in = it.buffered
         while (in.hasNext) {
           val head = in.head
-          validateTopic(head.topic)
-          val dir = new org.apache.hadoop.fs.Path(
-            s"$outPath/topic=${head.topic}/part=${head.part}")
-          val segPath = new org.apache.hadoop.fs.Path(dir, s"$segName.glog")
-          val tmpPath = new org.apache.hadoop.fs.Path(dir,
-            s".$segName.glog.tmp-$attempt")
-          val pfs = segPath.getFileSystem(conf)
-          val out = new DataOutputStream(pfs.create(tmpPath, true))
-          // Segment stats for the .glogx sidecar: the stream is offset-
-          // sorted within (topic, part), so min = first, max = last.
-          var minOffs = Long.MaxValue
-          var maxOffs = Long.MinValue
-          var maxTms = Long.MinValue
-          try {
-            while (in.hasNext && in.head.topic == head.topic &&
-              in.head.part == head.part) {
-              val group = scala.collection.mutable.ArrayBuffer[Rec]()
-              while (in.hasNext && group.size < MaxBatch &&
-                in.head.topic == head.topic && in.head.part == head.part)
-                group += in.next()
-              minOffs = math.min(minOffs, group.head.offs)
-              maxOffs = math.max(maxOffs, group.last.offs)
-              maxTms = math.max(maxTms, group.iterator.map(_.tms).max)
-              val bytes = encodeBatch(group.toSeq)
-              out.writeInt(bytes.length)
-              out.write(bytes)
-            }
-          } finally out.close()
-          // Publish with a rename-ONLY commit: a delete-then-rename pair
-          // would open a window in which a concurrent reader (listEnds in
-          // the streaming source's latestOffset, the sink's offset
-          // assignment) lists the directory, misses a committed segment,
-          // and computes a shrunken end offset. Retried batches drop
-          // their stale segments up front (dropBatchSegments), so a
-          // rename that loses because the destination exists is a
-          // concurrent duplicate attempt with identical bytes — drop
-          // ours and let theirs stand.
-          if (!pfs.rename(tmpPath, segPath)) {
-            pfs.delete(tmpPath, false)
-            require(pfs.exists(segPath),
-              s"glog segment commit failed for $segPath")
-            // a concurrent duplicate attempt won: its identical bytes
-            // stand, and its own sidecar write covers the stats
-          } else writeStats(pfs, segPath, minOffs, maxOffs, maxTms, attempt)
+          val same = new Iterator[Rec] {
+            def hasNext: Boolean = in.hasNext && in.head.topic == head.topic &&
+              in.head.part == head.part
+            def next(): Rec = in.next()
+          }
+          writeSegment(hconf.value, outPath, segName, head.topic, head.part, same)
         }
       }
+  }
+
+  /** Write segment `segName` of one (topic, part) of the store at
+    * `outPath` from `recs`, that partition's records in ascending offset
+    * order: [[MaxBatch]]-record batches, then the `.glogx` sidecar. Writes
+    * nothing when `recs` is empty. This is the store's one commit path;
+    * [[writeSegments]] and [[GlogOps.compactStore]] both end here.
+    *
+    * Commit protocol: the segment is written to a task-attempt-unique
+    * hidden temp file and renamed into place on success, so a speculative
+    * or zombie duplicate attempt can never interleave bytes with the
+    * winner — the same staging+commit discipline Spark's file sources use.
+    * Readers only see `*.glog`, never the in-flight `.*.tmp-*` files.
+    */
+  def writeSegment(conf: org.apache.hadoop.conf.Configuration, outPath: String,
+      segName: String, topic: String, part: Long, recs: Iterator[Rec]): Unit = {
+    if (!recs.hasNext) return
+    validateTopic(topic)
+    val attempt = Option(org.apache.spark.TaskContext.get())
+      .map(tc => s"${tc.stageId()}-${tc.taskAttemptId()}")
+      .getOrElse("driver")
+    val dir = new org.apache.hadoop.fs.Path(s"$outPath/topic=$topic/part=$part")
+    val segPath = new org.apache.hadoop.fs.Path(dir, s"$segName.glog")
+    val tmpPath = new org.apache.hadoop.fs.Path(dir,
+      s".$segName.glog.tmp-$attempt")
+    val pfs = segPath.getFileSystem(conf)
+    val out = new DataOutputStream(pfs.create(tmpPath, true))
+    // Segment stats for the .glogx sidecar: the records are offset-
+    // sorted, so min = first, max = last.
+    var minOffs = Long.MaxValue
+    var maxOffs = Long.MinValue
+    var maxTms = Long.MinValue
+    try {
+      while (recs.hasNext) {
+        val group = scala.collection.mutable.ArrayBuffer[Rec]()
+        while (recs.hasNext && group.size < MaxBatch) group += recs.next()
+        minOffs = math.min(minOffs, group.head.offs)
+        maxOffs = math.max(maxOffs, group.last.offs)
+        maxTms = math.max(maxTms, group.iterator.map(_.tms).max)
+        val bytes = encodeBatch(group.toSeq)
+        out.writeInt(bytes.length)
+        out.write(bytes)
+      }
+    } finally out.close()
+    // Publish with a rename-ONLY commit: a delete-then-rename pair
+    // would open a window in which a concurrent reader (listEnds in
+    // the streaming source's latestOffset, the sink's offset
+    // assignment) lists the directory, misses a committed segment,
+    // and computes a shrunken end offset. Retried batches drop
+    // their stale segments up front (dropBatchSegments), so a
+    // rename that loses because the destination exists is a
+    // concurrent duplicate attempt with identical bytes — drop
+    // ours and let theirs stand.
+    if (!pfs.rename(tmpPath, segPath)) {
+      pfs.delete(tmpPath, false)
+      require(pfs.exists(segPath),
+        s"glog segment commit failed for $segPath")
+      // a concurrent duplicate attempt won: its identical bytes
+      // stand, and its own sidecar write covers the stats
+    } else writeStats(pfs, segPath, minOffs, maxOffs, maxTms, attempt)
   }
 
   /** Materialize the canonical log view as a glog store (`_SUCCESS`
@@ -367,11 +422,8 @@ object Glog {
     val seg = "segment-b(\\d+)\\.glog".r
     val idx = "segment-b(\\d+)\\.glogx".r
     for {
-      tDir <- fs.listStatus(root)
-      if tDir.isDirectory && tDir.getPath.getName.startsWith("topic=")
-      pDir <- fs.listStatus(tDir.getPath)
-      if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
-      f <- fs.listStatus(pDir.getPath)
+      (_, _, pDir) <- partitionDirs(fs, root)
+      f <- fs.listStatus(pDir)
       name = f.getPath.getName
     } name match {
       case seg(id) if id.toLong >= fromBatchId => fs.delete(f.getPath, false)
@@ -391,15 +443,8 @@ object Glog {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return Map.empty
-    (for {
-      tDir <- fs.listStatus(root).toSeq
-      if tDir.isDirectory && tDir.getPath.getName.startsWith("topic=")
-      pDir <- fs.listStatus(tDir.getPath).toSeq
-      if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
-    } yield {
-      val topic = tDir.getPath.getName.stripPrefix("topic=")
-      val part = pDir.getPath.getName.stripPrefix("part=")
-      s"$topic/$part" -> endOffset(fs, pDir.getPath)
-    }).toMap
+    partitionDirs(fs, root).map { case (topic, part, pDir) =>
+      s"$topic/$part" -> endOffset(fs, pDir)
+    }.toMap
   }
 }

@@ -1,7 +1,12 @@
 package graft.sources
 
+import java.io.DataInputStream
+
 import graft.log.LogOps
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Driver-checked query over the [[Glog]] store: materialize the log into
   * the engine's own segment format (idempotent), read it back through the
@@ -41,26 +46,95 @@ object GlogOps {
   /** Store-level compaction (Kafka's LogCleaner as a batch rewrite): read
     * a glog store, keep the latest record per (topic, part, key) with its
     * ORIGINAL offset (compaction never renumbers), and write a compacted
-    * store — offsets inside segments stay ordered, so header-based offset
-    * seeks keep working on the gaps.
+    * store `segment-0` per partition — offsets inside segments stay
+    * ordered, so header-based offset seeks keep working on the gaps.
+    *
+    * One Spark job with one task per `topic=/part=` directory of the
+    * input; the store's layout already partitions the work, so there is
+    * no shuffle, window or sort. Each task makes two passes over its
+    * directory's segments:
+    *  1. keys only (`needV = false`): an offset map from each key to the
+    *     (tms, event_id, offs) of its latest record. Null keys are one
+    *     key. Memory is bounded by the partition's distinct keys; values
+    *     are never held.
+    *  2. the segments again in ascending first-offset order (not name
+    *     order: `segment-b10` sorts before `segment-b2`), streaming each
+    *     record the map names, at its original offset, into
+    *     [[Glog.writeSegment]] — the same commit path appends use.
     *
     * "Latest" is the engine-wide (tms, event_id) rule — deliberately the
     * same survivor LogOps.compact and Streams.latestPerKey pick (and the
     * specs pin), NOT Kafka's highest-offset rule; the three compaction
-    * paths must agree with each other first.
+    * paths must agree with each other first. A full (tms, event_id) tie
+    * goes to the higher offset, so the survivor is always unique.
+    *
+    * A glog partition is append-only: its offsets strictly increase
+    * through its segments in first-offset order. A directory where they
+    * do not (overlapping or unsorted segments) fails the job with an
+    * IllegalStateException naming the directory. An input store with no
+    * partition directories writes nothing.
     */
   def compactStore(spark: SparkSession, inPath: String, outPath: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val w = Window.partitionBy("topic", "part", "k")
-      .orderBy(col("tms").desc, col("event_id").desc)
-    val kept = spark.read.format("glog").load(inPath)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("topic", "part", "offs", "event_id", "tms", "k", "v")
-      .as[Glog.Rec]
-    Glog.writeSegments(kept, outPath, "segment-0")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(inPath)
+    val dirs = Glog.partitionDirs(root.getFileSystem(conf), root)
+      .map { case (topic, part, dir) => (topic, part.toLong, dir.toString) }
+    if (dirs.isEmpty) return
+    val hconf = new SerializableConfiguration(conf)
+    spark.sparkContext.parallelize(dirs, dirs.size).foreach {
+      case (topic, part, dir) =>
+        cleanPartition(hconf.value, topic, part, new Path(dir), outPath)
+    }
+  }
+
+  /** The rank fields of a key's latest record so far. */
+  private final class Latest(var tms: Long, var eventId: Long, var offs: Long)
+
+  /** Both passes of [[compactStore]] over one partition directory. */
+  private def cleanPartition(conf: Configuration, topic: String, part: Long,
+      dir: Path, outPath: String): Unit = {
+    val fs = dir.getFileSystem(conf)
+    def open(seg: Path) = new DataInputStream(fs.open(seg))
+    // Pass 1: the offset map, and each segment's offset range.
+    val latest = new java.util.HashMap[String, Latest]()
+    val ranges = Glog.segmentFiles(fs, dir).flatMap { st =>
+      val in = open(st.getPath)
+      try {
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
+        Glog.readSegment(in, topic, part, Long.MinValue, needV = false).foreach { r =>
+          if (r.offs <= hi) throw new IllegalStateException(
+            s"glog partition $dir is not append-only: offset ${r.offs} " +
+              s"follows $hi in ${st.getPath.getName}")
+          if (lo == Long.MaxValue) lo = r.offs
+          hi = r.offs
+          val l = latest.get(r.k)
+          if (l == null) latest.put(r.k, new Latest(r.tms, r.event_id, r.offs))
+          else if (r.tms > l.tms || r.tms == l.tms && (r.event_id > l.eventId ||
+              r.event_id == l.eventId && r.offs > l.offs)) {
+            l.tms = r.tms; l.eventId = r.event_id; l.offs = r.offs
+          }
+        }
+        if (hi == Long.MinValue) None else Some((st.getPath, lo, hi))
+      } finally in.close()
+    }.sortBy(_._2)
+    ranges.iterator.sliding(2).withPartial(false).foreach { case Seq(a, b) =>
+      if (a._3 >= b._2) throw new IllegalStateException(
+        s"glog partition $dir is not append-only: ${a._1.getName} " +
+          s"[${a._2}, ${a._3}] overlaps ${b._1.getName} [${b._2}, ${b._3}]")
+    }
+    // Pass 2: the survivors, streamed in offset order. Each segment's
+    // stream closes when it is exhausted; the finally covers a failure.
+    val opened = scala.collection.mutable.ArrayBuffer.empty[DataInputStream]
+    try {
+      val survivors = ranges.iterator.flatMap { case (seg, _, _) =>
+        val in = open(seg)
+        opened += in
+        Glog.readSegment(in, topic, part, Long.MinValue)
+          .filter(r => latest.get(r.k).offs == r.offs) ++ { in.close(); Iterator.empty }
+      }
+      Glog.writeSegment(conf, outPath, "segment-0", topic, part, survivors)
+    } finally opened.foreach(_.close())
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

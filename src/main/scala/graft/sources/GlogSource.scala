@@ -158,8 +158,7 @@ class GlogScan(path: String, required: StructType, topicEq: Option[String],
       if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
       part = pDir.getPath.getName.stripPrefix("part=").toLong
       if partEq.forall(_ == part)
-      seg <- fs.listStatus(pDir.getPath).toSeq
-      if seg.getPath.getName.endsWith(".glog")
+      seg <- Glog.segmentFiles(fs, pDir.getPath)
       // Segment-level pruning off the .glogx stats sidecar: a pushed
       // offset/time bound that clears the whole segment drops the FILE
       // from the scan without opening it (sidecar missing → keep the
@@ -279,8 +278,7 @@ class GlogMicroBatchStream(path: String, required: StructType, minOffs: Long,
       else {
         val Array(topic, part) = key.split("/", 2)
         val dir = new Path(root, s"topic=$topic/part=$part")
-        fs.listStatus(dir).toSeq
-          .filter(_.getPath.getName.endsWith(".glog"))
+        Glog.segmentFiles(fs, dir)
           // sidecar pruning: a segment wholly outside this micro-batch's
           // [start, end) offset window never opens — a stream restarted
           // near the tail re-reads the tail, not the whole store

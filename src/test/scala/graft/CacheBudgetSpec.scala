@@ -88,6 +88,24 @@ class CacheBudgetSpec extends AnyFunSuite {
       s"footprint grew from $f1 to $f2 across a repeated working set")
   }
 
+  test("budget eviction reaches an abandoned session's slots") {
+    // The budget measures the whole SparkContext's storage, so a session
+    // nobody uses any more must not keep its slots while the live session
+    // is forced to evict its own.
+    val other = spark.newSession()
+    SparkEntry.queries("anomaly_mad")(other, dir).collect()
+    assert(FrameCache.residentKeys(other).size == 2,
+      s"expected the dev and mc slots: ${FrameCache.residentKeys(other)}")
+    FrameCache.withBudget(1L) {
+      SparkEntry.queries("basket_pairs")(spark, dir).collect()
+    }
+    assert(FrameCache.residentKeys(other).isEmpty,
+      s"the other session kept its slots: ${FrameCache.residentKeys(other)}")
+    // the running query's own (pinned) frames were built and kept
+    assert(FrameCache.residentKeys(spark).exists(_.startsWith("Analytics.basket")),
+      s"main session slots: ${FrameCache.residentKeys(spark)}")
+  }
+
   /** A private, writable copy of the sf0.001 tables. */
   private def copyOfSf0001(): java.nio.file.Path = {
     val d = java.nio.file.Files.createTempDirectory("graft_cache_copy")

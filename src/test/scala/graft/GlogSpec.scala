@@ -365,6 +365,165 @@ class GlogSpec extends AnyFunSuite {
       Map("t/0" -> 200L))
   }
 
+  /** A fresh temp directory path that does not exist yet. */
+  private def freshPath(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    java.nio.file.Files.delete(d)
+    d.toString
+  }
+
+  /** Write `recs` (one partition, ascending offsets) as segment `seg`. */
+  private def segment(store: String, seg: String, recs: Seq[Glog.Rec]): Unit =
+    Glog.writeSegment(spark.sparkContext.hadoopConfiguration, store, seg,
+      recs.head.topic, recs.head.part, recs.iterator)
+
+  private def readAll(path: String): Seq[Glog.Rec] = {
+    import spark.implicits._
+    spark.read.format("glog").load(path).as[Glog.Rec].collect().toSeq
+      .sortBy(r => (r.topic, r.part, r.offs))
+  }
+
+  test("pre-v5 gapped batches: offset seeks and end offsets are exact") {
+    // A v4 batch (no max offset in its header) as a compaction before v5
+    // wrote it: 51 records at offsets 0, 4, ..., 196 and 199 — far past
+    // base + count.
+    val offs = (0L until 200L by 4L) :+ 199L
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeByte(Glog.MagicT)
+    out.writeInt(offs.size)
+    out.writeLong(0L)
+    out.writeLong(1700000000000L + 199L)
+    offs.foreach { o =>
+      out.writeInt(o.toInt)
+      out.writeLong(1700000000000L + o)
+      out.writeLong(1000L + o)
+      for (s <- Seq(s"k$o", s"v$o")) {
+        val b = s.getBytes("UTF-8"); out.writeInt(b.length); out.write(b)
+      }
+    }
+    out.flush()
+    val batch = bos.toByteArray
+    val store = java.nio.file.Files.createTempDirectory("graft_glog_v4").toString
+    val pDir = java.nio.file.Paths.get(store, "topic=t", "part=0")
+    java.nio.file.Files.createDirectories(pDir)
+    val seg = new java.io.DataOutputStream(
+      new java.io.FileOutputStream(pDir.resolve("segment-0.glog").toFile))
+    seg.writeInt(batch.length); seg.write(batch); seg.close()
+    import spark.implicits._
+    val tail = spark.read.format("glog").load(store)
+      .filter(col("offs") >= 150L).select("offs").as[Long].collect().sorted
+    assert(tail.toSeq == offs.filter(_ >= 150L))
+    assert(Glog.listEnds(store, spark.sparkContext.hadoopConfiguration) ==
+      Map("t/0" -> 200L))
+  }
+
+  test("compaction survivors: null keys, full ties, later segments, offset order") {
+    def rec(offs: Long, k: String, tms: Long, eid: Long) =
+      Glog.Rec("t", 0L, offs, eid, tms, k, s"v$offs")
+    val in = java.nio.file.Files.createTempDirectory("graft_glog_keys").toString
+    // segment-b10 sorts before segment-b2 by name but holds later offsets
+    segment(in, "segment-b2", Seq(rec(0, null, 100, 1), rec(1, "a", 100, 5),
+      rec(2, "tie", 200, 7), rec(3, null, 150, 2), rec(4, "b", 300, 9)))
+    segment(in, "segment-b10", Seq(rec(5, "a", 400, 10), rec(6, "tie", 200, 7),
+      rec(7, null, 120, 3), rec(8, "c", 50, 11), rec(9, "b", 250, 12),
+      rec(10, "tie2", 60, 13), rec(11, "tie2", 60, 13)))
+    // and a second partition, compacted independently
+    segment(in, "segment-b2", Seq(Glog.Rec("t", 1L, 0L, 20L, 10L, "a", "w0"),
+      Glog.Rec("t", 1L, 1L, 21L, 10L, "a", "w1")))
+    val out = freshPath("graft_glog_keys_c")
+    graft.sources.GlogOps.compactStore(spark, in, out)
+    // null keys are one key (latest: offset 3); "a" is superseded in the
+    // later segment; a full (tms, event_id) tie goes to the higher offset,
+    // across segments and within one; "b" keeps offset 4, whose tms is
+    // newer than offset 9's
+    assert(readAll(out).map(r => (r.part, r.offs, r.v)) == Seq(
+      (0L, 3L, "v3"), (0L, 4L, "v4"), (0L, 5L, "v5"), (0L, 6L, "v6"), (0L, 8L, "v8"),
+      (0L, 11L, "v11"), (1L, 1L, "w1")))
+    // the batch path agrees with the cleaner on the same records
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("topic", "part", "k")
+      .orderBy(col("tms").desc, col("event_id").desc, col("offs").desc)
+    val ref = spark.read.format("glog").load(in)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select("topic", "part", "offs").collect().map(r => (r.getLong(1), r.getLong(2)))
+    assert(ref.sorted.toSeq == readAll(out).map(r => (r.part, r.offs)))
+  }
+
+  test("compaction ignores temp files and markers, skips an empty store, rejects overlaps") {
+    def rec(offs: Long, k: String) = Glog.Rec("t", 0L, offs, offs, offs, k, s"v$offs")
+    val in = java.nio.file.Files.createTempDirectory("graft_glog_store").toString
+    segment(in, "segment-b0", Seq(rec(0, "a"), rec(1, "b")))
+    val pDir = java.nio.file.Paths.get(in, "topic=t", "part=0")
+    assert(java.nio.file.Files.exists(pDir.resolve("segment-b0.glogx")))
+    // a zombie attempt's temp file whose records would change the result,
+    // and _SUCCESS markers at the root and in the partition directory
+    segment(in, "segment-b1", Seq(rec(2, "a")))
+    java.nio.file.Files.move(pDir.resolve("segment-b1.glog"),
+      pDir.resolve(".segment-b1.glog.tmp-zombie"))
+    java.nio.file.Files.delete(pDir.resolve("segment-b1.glogx"))
+    for (d <- Seq(java.nio.file.Paths.get(in), pDir))
+      java.nio.file.Files.createFile(d.resolve("_SUCCESS"))
+    val out = freshPath("graft_glog_store_c")
+    graft.sources.GlogOps.compactStore(spark, in, out)
+    assert(readAll(out).map(_.offs) == Seq(0L, 1L))
+    // a store with no partition directories writes nothing
+    val empty = java.nio.file.Files.createTempDirectory("graft_glog_empty")
+    java.nio.file.Files.createFile(empty.resolve("_SUCCESS"))
+    val emptyOut = freshPath("graft_glog_empty_c")
+    graft.sources.GlogOps.compactStore(spark, empty.toString, emptyOut)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(emptyOut)))
+    // overlapping offset ranges: a glog partition is append-only
+    segment(in, "segment-b2", Seq(rec(1, "c"), rec(5, "d")))
+    val e = intercept[org.apache.spark.SparkException] {
+      graft.sources.GlogOps.compactStore(spark, in, freshPath("graft_glog_overlap"))
+    }
+    assert(e.getMessage.contains("topic=t/part=0 is not append-only"), e.getMessage)
+  }
+
+  test("compaction is one job, one task per partition directory, no shuffle") {
+    import org.apache.spark.scheduler._
+    val dirs = Glog.listEnds(store, spark.sparkContext.hadoopConfiguration).size
+    val (group, marker) = ("glog-compaction-shape", "glog-compaction-shape-end")
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` =>
+            jobs.add(e.jobId)
+            e.stageIds.foreach(stages.add(_))
+          case `marker` => drained.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
+            e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "compaction shape")
+      graft.sources.GlogOps.compactStore(spark, store, freshPath("graft_glog_shape"))
+      // Listener events arrive in order but asynchronously: once a later
+      // job's start is seen, every compaction event has been.
+      sc.setJobGroup(marker, "compaction shape: drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.size == 1)
+    assert(tasks.get() == dirs)
+    assert(shuffleBytes.get() == 0L)
+  }
+
   test("streaming log-end monitor over the glog tail matches batch list_offsets") {
     val got = graft.streaming.Streams.runLogEndStream(spark, store)
       .select("topic", "part", "log_end", "n")

@@ -27,7 +27,8 @@ import org.apache.spark.sql.SparkSession
   *   at cores vs 16x, 8 the other way, net −14 s on the registry.
   */
 object GraftSession {
-  private val InitParts = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+  private[graft] val InitParts =
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
   def build(master: String, cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -64,12 +65,20 @@ object GraftSession {
     */
   def withWideState[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.getOption(InitParts)
-    val wide = (spark.conf.get("spark.sql.shuffle.partitions").toInt * 16)
-    spark.conf.set(InitParts, wide.toString)
+    setFanOut(spark, wide = true)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(InitParts, v)
       case None => spark.conf.unset(InitParts)
     }
+  }
+
+  /** Plan the session's shuffles at 16x its reducer count when `wide`, at
+    * the reducer count otherwise. The conf is read when a plan
+    * executes, so the setting holds until the next call.
+    */
+  private[graft] def setFanOut(spark: SparkSession, wide: Boolean): Unit = {
+    val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    spark.conf.set(InitParts, (if (wide) base * 16 else base).toString)
   }
 }

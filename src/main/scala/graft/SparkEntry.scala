@@ -47,13 +47,13 @@ object SparkEntry {
   /** Queries whose execution carries object-aggregation state over
     * fact-cardinality keys OUTSIDE a cached build (per-user path collects,
     * per-fingerprint bucket lists, per-vertex adjacency sets) — the one
-    * class that needs the 16x-cores shuffle fan-out at the 1000x decade
+    * class that needs the wide shuffle fan-out at the 1000x decade
     * (per-task hash state grows with data; see GraftSession.withWideState).
-    * Everything else plans at cores: measured at sf0.1/local[32], the
-    * session-wide 16x default cost 112 of 327 queries >50 ms each and
+    * Everything else plans at cores: measured at sf0.1/local[32], running
+    * every query wide cost 112 of 327 queries >50 ms each and
     * bought nothing outside this class.
     */
-  private val wideStateQueries: Set[String] =
+  private[graft] val wideStateQueries: Set[String] =
     Set("event_paths", "substring_dup_pairs", "snn_graph", "knn_triangles")
 
   /** One entry per implemented operator from SURVEY.md §2. Each closure
@@ -66,10 +66,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.map(_._1).reduce(_ ++ _).map { case (name, fn) =>
       name -> { (s: SparkSession, d: String) =>
-        val base = s.conf.get("spark.sql.shuffle.partitions").toInt
-        s.conf.set(
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          (if (wideStateQueries(name)) base * 16 else base).toString)
+        GraftSession.setFanOut(s, wideStateQueries(name))
         // Evict over-budget leftovers from the PREVIOUS query before this
         // one plans: queries that touch no frame cache never trigger the
         // per-access enforcement, and at the 1000x decade a predecessor's

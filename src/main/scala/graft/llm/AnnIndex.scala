@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * coarse fit and the PQ codebook fit (both Lloyd-to-fixpoint loops over
   * the corpus) plus the corpus-sized encode. Those are INDEX-BUILD costs;
   * a query should pay none of them. This object materializes the three
-  * index artifacts once, in the [[graft.sources.LogStore.materialize]]
-  * layout discipline:
+  * index artifacts once, laid out for directory pruning like the glog
+  * store's (topic, part) tree ([[graft.sources.Glog]]):
   *
   *  - `centroids/` — the fitted coarse quantizer (cid, cv, cnrm): K rows.
   *  - `codebook/`  — the trained PQ sub-codebooks (s, cid, cv): 8x16 rows.

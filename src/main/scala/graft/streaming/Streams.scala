@@ -1015,29 +1015,6 @@ object Streams {
     spark.table("graft_stream_latency")
   }
 
-  /** Streaming ingest sink: consume the event stream and append it to the
-    * partitioned log store layout via foreachBatch — the continuous form of
-    * LogStore.materialize (produce-side persistence). Returns the number of
-    * micro-batches processed.
-    */
-  def runIngestStream(spark: SparkSession, dir: String, outPath: String): Long = {
-    val stream = eventStream(spark, dir)
-    var batches = 0L
-    val q = stream
-      .withColumn("tms", graft.functions.Parity.nsToMs("ts"))
-      .withColumn("topic", col("event_type"))
-      .withColumn("day", concat(lit("d"), expr("CAST(tms div 86400000 AS STRING)")))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batches += 1
-        batch.write.mode("append").partitionBy("topic", "day").parquet(outPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    batches
-  }
-
   /** Streaming glog sink: append each micro-batch to a glog store as new
     * segments, continuing every partition's offset sequence from the
     * store's current end offsets — the broker's produce-side append

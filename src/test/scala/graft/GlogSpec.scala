@@ -282,6 +282,7 @@ class GlogSpec extends AnyFunSuite {
     assert(batches >= 1)
     val got = spark.read.format("glog").load(out)
     assert(got.count() == Tables.t(spark, dir, "events").count())
+    assert(got.select("topic").distinct().count() == 5)
     // every (topic, part) has dense offsets 0..n-1 regardless of batching
     val dense = got.groupBy("topic", "part")
       .agg(min("offs").as("mn"), max("offs").as("mx"), count(lit(1)).as("n"))

@@ -34,4 +34,17 @@ class RegistryGuardSpec extends AnyFunSuite {
       s"registry entries over the $RowBudget-row sf0.001 budget: " +
         over.mkString(", "))
   }
+
+  test("registry closures pin the wide fan-out to the wide-state queries") {
+    val queries = SparkEntry.queries
+    // A renamed query would silently drop out of the wide set.
+    val unregistered = SparkEntry.wideStateQueries -- queries.keySet
+    assert(unregistered.isEmpty,
+      s"wide-state names with no registry entry: ${unregistered.mkString(", ")}")
+    val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    queries("event_paths")(spark, dir)
+    assert(spark.conf.get(GraftSession.InitParts).toInt == base * 16)
+    queries("q1_agg")(spark, dir)
+    assert(spark.conf.get(GraftSession.InitParts).toInt == base)
+  }
 }

@@ -224,12 +224,18 @@ object Glog {
     end
   }
 
-  /** The segment files of one (topic, part) directory: every `*.glog`
-    * (not `.glogx` sidecars, not in-flight `.*.tmp-*` files).
+  /** The segment files of one (topic, part) directory: every `*.glog`,
+    * and nothing else — not in-flight `.*.tmp-*` files, not markers, not
+    * the `.glogx` stats files that stores written by earlier versions
+    * still hold (the batch headers carry the same bounds).
     */
   def segmentFiles(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
     fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".glog"))
+
+  /** The directory of one (topic, part) in the store at `root`. */
+  def partitionDir(root: String, topic: String, part: Long): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"$root/topic=$topic/part=$part")
 
   /** The `topic=<t>/part=<p>` directories of a store, as (topic, part,
     * directory). The store root must exist.
@@ -243,60 +249,6 @@ object Glog {
       if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
     } yield (tDir.getPath.getName.stripPrefix("topic="),
       pDir.getPath.getName.stripPrefix("part="), pDir.getPath)
-
-  /** Segment-stats sidecar (`<segment>.glogx`, "v1 minOffs maxOffs
-    * maxTms") — the segment-level index over the batch-level header
-    * index: planInputPartitions drops a WHOLE segment from the scan when
-    * a pushed offset/time lower bound clears its max, without opening
-    * it. Strictly advisory: a missing or unreadable sidecar only
-    * disables pruning for that segment (readers stay correct via the
-    * batch-header skips), so the commit order — segment rename first,
-    * sidecar best-effort after — can never lose data. Reference frame:
-    * Kafka's .index/.timeindex sidecars next to each .log segment
-    * (kafka-impl storage/PartitionLog offset/time lookups).
-    */
-  def statsPath(seg: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(seg.getParent,
-      seg.getName.stripSuffix(".glog") + ".glogx")
-
-  def writeStats(fs: org.apache.hadoop.fs.FileSystem,
-      seg: org.apache.hadoop.fs.Path, minOffs: Long, maxOffs: Long,
-      maxTms: Long, attempt: String): Unit = {
-    val dest = statsPath(seg)
-    val tmp = new org.apache.hadoop.fs.Path(seg.getParent,
-      s".${dest.getName}.tmp-$attempt")
-    try {
-      val out = new DataOutputStream(fs.create(tmp, true))
-      try out.writeBytes(s"v1 $minOffs $maxOffs $maxTms\n")
-      finally out.close()
-      // Replace, never keep, a pre-existing sidecar: rename-onto-existing
-      // fails on HDFS-like filesystems, and a STALE .glogx paired with a
-      // rewritten segment is trusted to drop whole segments from scans —
-      // silent data loss, where a MISSING sidecar is safe by design (the
-      // reader falls back to scanning the segment).
-      fs.delete(dest, false)
-      if (!fs.rename(tmp, dest)) fs.delete(tmp, false)
-    } catch { case _: java.io.IOException => () } // advisory only
-  }
-
-  def readStats(fs: org.apache.hadoop.fs.FileSystem,
-      seg: org.apache.hadoop.fs.Path): Option[(Long, Long, Long)] =
-    try {
-      val p = statsPath(seg)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val line =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .nextOption().getOrElse("")
-          finally in.close()
-        line.split(' ') match {
-          case Array("v1", mn, mx, mt) =>
-            Some((mn.toLong, mx.toLong, mt.toLong))
-          case _ => None
-        }
-      }
-    } catch { case _: Exception => None } // advisory only
 
   /** Topic names become directory names and "topic/part" offset-map keys;
     * reject names that cannot round-trip through either.
@@ -333,9 +285,10 @@ object Glog {
 
   /** Write segment `segName` of one (topic, part) of the store at
     * `outPath` from `recs`, that partition's records in ascending offset
-    * order: [[MaxBatch]]-record batches, then the `.glogx` sidecar. Writes
-    * nothing when `recs` is empty. This is the store's one commit path;
-    * [[writeSegments]] and [[GlogOps.compactStore]] both end here.
+    * order, as [[MaxBatch]]-record batches: one file per commit, whose
+    * batch headers are the only index. Writes nothing when `recs` is
+    * empty. This is the store's one commit path; [[writeSegments]] and
+    * [[GlogOps.compactStore]] both end here.
     *
     * Commit protocol: the segment is written to a task-attempt-unique
     * hidden temp file and renamed into place on success, so a speculative
@@ -350,24 +303,16 @@ object Glog {
     val attempt = Option(org.apache.spark.TaskContext.get())
       .map(tc => s"${tc.stageId()}-${tc.taskAttemptId()}")
       .getOrElse("driver")
-    val dir = new org.apache.hadoop.fs.Path(s"$outPath/topic=$topic/part=$part")
+    val dir = partitionDir(outPath, topic, part)
     val segPath = new org.apache.hadoop.fs.Path(dir, s"$segName.glog")
     val tmpPath = new org.apache.hadoop.fs.Path(dir,
       s".$segName.glog.tmp-$attempt")
     val pfs = segPath.getFileSystem(conf)
     val out = new DataOutputStream(pfs.create(tmpPath, true))
-    // Segment stats for the .glogx sidecar: the records are offset-
-    // sorted, so min = first, max = last.
-    var minOffs = Long.MaxValue
-    var maxOffs = Long.MinValue
-    var maxTms = Long.MinValue
     try {
       while (recs.hasNext) {
         val group = scala.collection.mutable.ArrayBuffer[Rec]()
         while (recs.hasNext && group.size < MaxBatch) group += recs.next()
-        minOffs = math.min(minOffs, group.head.offs)
-        maxOffs = math.max(maxOffs, group.last.offs)
-        maxTms = math.max(maxTms, group.iterator.map(_.tms).max)
         val bytes = encodeBatch(group.toSeq)
         out.writeInt(bytes.length)
         out.write(bytes)
@@ -386,9 +331,7 @@ object Glog {
       pfs.delete(tmpPath, false)
       require(pfs.exists(segPath),
         s"glog segment commit failed for $segPath")
-      // a concurrent duplicate attempt won: its identical bytes
-      // stand, and its own sidecar write covers the stats
-    } else writeStats(pfs, segPath, minOffs, maxOffs, maxTms, attempt)
+    }
   }
 
   /** Materialize the canonical log view as a glog store (`_SUCCESS`
@@ -420,14 +363,12 @@ object Glog {
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return
     val seg = "segment-b(\\d+)\\.glog".r
-    val idx = "segment-b(\\d+)\\.glogx".r
     for {
       (_, _, pDir) <- partitionDirs(fs, root)
       f <- fs.listStatus(pDir)
       name = f.getPath.getName
     } name match {
       case seg(id) if id.toLong >= fromBatchId => fs.delete(f.getPath, false)
-      case idx(id) if id.toLong >= fromBatchId => fs.delete(f.getPath, false)
       case _ if name.startsWith(".") && name.contains(".tmp-") =>
         fs.delete(f.getPath, false)
       case _ => ()

@@ -30,10 +30,11 @@ object GlogOps {
   }
 
   /** Time-bounded fetch through the store: the same DSv2 read with a
-    * pushed `tms` lower bound, so v4 batch headers skip whole batches
-    * payload-free (the ListOffsets-by-time -> fetch path end to end over
-    * the engine's own storage; Kafka's .timeindex seek). Hash-exact
-    * against DuckDB filtering the log view the store was built from.
+    * pushed `tms` lower bound, so each batch header's max timestamp (v4
+    * and later; v5 today) skips whole batches payload-free (the
+    * ListOffsets-by-time -> fetch path end to end over the engine's own
+    * storage; Kafka's .timeindex seek). Hash-exact against DuckDB
+    * filtering the log view the store was built from.
     */
   def glogFetchTime(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col

@@ -18,14 +18,18 @@ import org.apache.spark.util.SerializableConfiguration
 /** DataSource V2 connector for the [[Glog]] segment format:
   * `spark.read.format("glog").load(path)`.
   *
-  * Planning prunes (topic, part) directories from pushed equality filters
-  * and threads an `offs` lower bound down to the batch-header skip in the
-  * reader — the reference's fetch path (seek by offset inside one
-  * topic-partition; /root/reference/kafka-impl/.../MessageFetchContext.java)
-  * expressed as a Spark source. Column pruning drops unread fields before
-  * row materialization. All pushed filters are still re-applied by Spark
-  * above the scan (pushFilters returns them as residuals), so pruning can
-  * only ever skip data the filters exclude — never change results.
+  * A (topic, part) directory is the unit of reading, as the log's
+  * partition is: planning lists the directories that pushed topic/part
+  * equalities leave, without opening a file, and plans one input
+  * partition per directory holding all of its segment files. Pushed
+  * `offs` bounds and a `tms` lower bound travel to the reader, whose v5
+  * batch headers skip every batch outside them without decoding it — the
+  * reference's fetch path (a bounded range scan of one topic-partition
+  * from an offset; MessageFetchContext.java) expressed as a Spark source.
+  * Column pruning drops unread fields before row materialization. All
+  * pushed filters are still re-applied by Spark above the scan
+  * (pushFilters returns them as residuals), so pruning can only ever skip
+  * data the filters exclude — never change results.
   */
 class GlogSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -48,7 +52,9 @@ object GlogSource {
     StructField("k", StringType),
     StructField("v", StringType)))
 
-  /** Files planned by the most recent scan (single-JVM test hook). */
+  /** Segment files in the directories planned by the most recent batch
+    * scan (single-JVM test hook).
+    */
   val lastPlannedFiles = new AtomicLong(-1)
 }
 
@@ -119,7 +125,8 @@ class GlogScanBuilder(path: String, startLatest: Boolean = false,
       startLatest, maxPerTrigger, untilOffs)
 }
 
-final case class GlogPartition(file: String, topic: String, part: Long,
+/** One (topic, part) directory's segment files, read in turn. */
+final case class GlogPartition(files: Seq[String], topic: String, part: Long,
     fromOffs: Long, untilOffs: Long = Long.MaxValue,
     minTms: Long = Long.MinValue) extends InputPartition
 
@@ -150,27 +157,12 @@ class GlogScan(path: String, required: StructType, topicEq: Option[String],
       .sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
     val parts = for {
-      tDir <- fs.listStatus(root).toSeq
-      if tDir.isDirectory && tDir.getPath.getName.startsWith("topic=")
-      topic = tDir.getPath.getName.stripPrefix("topic=")
-      if topicEq.forall(_ == topic)
-      pDir <- fs.listStatus(tDir.getPath).toSeq
-      if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
-      part = pDir.getPath.getName.stripPrefix("part=").toLong
-      if partEq.forall(_ == part)
-      seg <- Glog.segmentFiles(fs, pDir.getPath)
-      // Segment-level pruning off the .glogx stats sidecar: a pushed
-      // offset/time bound that clears the whole segment drops the FILE
-      // from the scan without opening it (sidecar missing → keep the
-      // segment; the batch-header skips still guarantee correctness).
-      if fromOffs == Long.MinValue && minTms == Long.MinValue &&
-        untilOffs == Long.MaxValue ||
-        Glog.readStats(fs, seg.getPath).forall { case (mn, mx, mt) =>
-          fromOffs <= mx && minTms <= mt && untilOffs > mn
-        }
-    } yield GlogPartition(seg.getPath.toString, topic, part, fromOffs,
-      untilOffs, minTms)
-    GlogSource.lastPlannedFiles.set(parts.size.toLong)
+      (topic, part, dir) <- Glog.partitionDirs(fs, root)
+      if topicEq.forall(_ == topic) && partEq.forall(_ == part.toLong)
+      files = Glog.segmentFiles(fs, dir).map(_.getPath.toString)
+      if files.nonEmpty
+    } yield GlogPartition(files, topic, part.toLong, fromOffs, untilOffs, minTms)
+    GlogSource.lastPlannedFiles.set(parts.map(_.files.size.toLong).sum)
     parts.toArray[InputPartition]
   }
 
@@ -207,10 +199,11 @@ object GlogOffset {
 /** Micro-batch tail of a glog store — the engine's Kafka-source analog:
   * each trigger lists (topic, part) directories, computes their end
   * offsets from batch headers (a log-end-offset lookup, no payload read),
-  * and plans one [start, end) slice per partition directory; readers skip
-  * batches outside the window from their headers. New segment files and
-  * new partitions appearing between triggers are picked up naturally
-  * (their previous end offset defaults to 0).
+  * and plans one input partition per directory with a [start, end) slice
+  * (one offset range per topic-partition, as Spark's Kafka source plans);
+  * readers skip batches outside the window from their headers. New
+  * segment files and new partitions appearing between triggers are
+  * picked up naturally (their previous end offset defaults to 0).
   */
 class GlogMicroBatchStream(path: String, required: StructType, minOffs: Long,
     minTms: Long = Long.MinValue, startLatest: Boolean = false,
@@ -270,24 +263,14 @@ class GlogMicroBatchStream(path: String, required: StructType, minOffs: Long,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[GlogOffset].ends
     val until = end.asInstanceOf[GlogOffset].ends
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = new Path(path).getFileSystem(conf)
     until.toSeq.flatMap { case (key, endOffs) =>
       val startOffs = math.max(from.getOrElse(key, 0L), minOffs)
-      if (endOffs <= startOffs) Seq.empty
-      else {
-        val Array(topic, part) = key.split("/", 2)
-        val dir = new Path(root, s"topic=$topic/part=$part")
-        Glog.segmentFiles(fs, dir)
-          // sidecar pruning: a segment wholly outside this micro-batch's
-          // [start, end) offset window never opens — a stream restarted
-          // near the tail re-reads the tail, not the whole store
-          .filter(seg => Glog.readStats(fs, seg.getPath).forall {
-            case (mn, mx, _) => startOffs <= mx && endOffs > mn
-          })
-          .map(seg => GlogPartition(seg.getPath.toString, topic, part.toLong,
-            startOffs, endOffs, minTms))
-      }
+      val Array(topic, part) = key.split("/", 2)
+      if (endOffs <= startOffs) None
+      else Some(GlogPartition(
+        Glog.segmentFiles(fs, Glog.partitionDir(path, topic, part.toLong))
+          .map(_.getPath.toString), topic, part.toLong, startOffs, endOffs, minTms))
     }.toArray
   }
 
@@ -300,17 +283,19 @@ class GlogReaderFactory(required: StructType, conf: SerializableConfiguration)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GlogPartition]
     new PartitionReader[InternalRow] {
-      private val in = {
-        val fp = new Path(p.file)
-        new DataInputStream(fp.getFileSystem(conf.value).open(fp))
-      }
+      // The open segment; each one closes before the next opens.
+      private var in: DataInputStream = _
       // Column pruning reaches the codec: record bodies are hopped over
       // via their length prefixes when the projection needs neither key
       // nor value, so a counts-only read decodes no payload at all.
-      private val it = Glog.readSegment(in, p.topic, p.part, p.fromOffs,
-        p.untilOffs, p.minTms,
-        needK = required.fieldNames.contains("k"),
-        needV = required.fieldNames.contains("v"))
+      private val it = p.files.iterator.flatMap { f =>
+        close()
+        val fp = new Path(f)
+        in = new DataInputStream(fp.getFileSystem(conf.value).open(fp))
+        Glog.readSegment(in, p.topic, p.part, p.fromOffs, p.untilOffs, p.minTms,
+          needK = required.fieldNames.contains("k"),
+          needV = required.fieldNames.contains("v"))
+      }
       // Column pruning: precompute the projection from field name to the
       // record accessor once per partition.
       private val getters: Array[Glog.Rec => Any] = required.fields.map { f =>
@@ -334,7 +319,7 @@ class GlogReaderFactory(required: StructType, conf: SerializableConfiguration)
           true
         } else false
       override def get(): InternalRow = row
-      override def close(): Unit = in.close()
+      override def close(): Unit = if (in != null) { in.close(); in = null }
     }
   }
 }

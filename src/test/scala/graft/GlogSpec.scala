@@ -37,18 +37,17 @@ class GlogSpec extends AnyFunSuite {
     assert(n == want)
   }
 
-  test("offset lower bound prunes or skips — files first, then headers") {
+  test("offset lower bound skips batches from their headers") {
     // Baseline: how many files a topic-only scan plans.
     GlogSource.lastPlannedFiles.set(-1)
     glog.filter(col("topic") === "click").count()
     val all = GlogSource.lastPlannedFiles.get()
     assert(all > 0)
-    // With the offset bound, the .glogx sidecars drop segments whose max
-    // offset clears the bound BEFORE they open (this store's segments
-    // are single-batch, so the old header-skip is subsumed by the
-    // file-level prune — batch-level skipping is pinned separately in
-    // the sidecar test's deleted-sidecar branch).
+    // With the offset bound the same directories are planned, and every
+    // batch whose max offset clears the bound is skipped from its header
+    // without decoding a record.
     GlogSource.lastPlannedFiles.set(-1)
+    Glog.batchesSkipped.set(0)
     val got = glog.filter(col("topic") === "click" && col("offs") >= 150L)
     val want = LogOps.log(spark, dir)
       .filter(col("topic") === "click" && col("offs") >= 150L)
@@ -56,7 +55,8 @@ class GlogSpec extends AnyFunSuite {
     assert(got.select("topic", "part", "offs", "event_id", "tms", "k", "v")
       .exceptAll(want).count() == 0 && want.exceptAll(
       got.select("topic", "part", "offs", "event_id", "tms", "k", "v")).count() == 0)
-    assert(GlogSource.lastPlannedFiles.get() < all)
+    assert(GlogSource.lastPlannedFiles.get() == all)
+    assert(Glog.batchesSkipped.get() > 0)
   }
 
   test("projection-only reads hop over record bodies via length prefixes") {
@@ -112,45 +112,95 @@ class GlogSpec extends AnyFunSuite {
     assert(Glog.batchesRead.get() > 0)
   }
 
-  test("segment stats sidecar prunes whole segments for pushed bounds") {
+  test("segments of one directory plan one input partition; pushed bounds stay exact") {
     import spark.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft_glogx").toString
+    val p = java.nio.file.Files.createTempDirectory("graft_glog_dir").toString
     def recs(lo: Long, hi: Long) = (lo until hi).map(i =>
       Glog.Rec("t", 0L, i, 1000L + i, 1700000000000L + i * 1000L,
         s"k$i", s"v$i"))
     Glog.writeSegments(spark.createDataset(recs(0L, 200L)), p, "segment-0")
     Glog.writeSegments(spark.createDataset(recs(200L, 400L)), p, "segment-1")
-    val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val seg0 = new org.apache.hadoop.fs.Path(
-      s"$p/topic=t/part=0/segment-0.glog")
-    assert(Glog.readStats(fs, seg0) == Some((0L, 199L, 1700000199000L)))
+    // one file per commit: the segments and their checksums, nothing else
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(p, "topic=t", "part=0"))
+      .toArray.map(_.toString.split('/').last).sorted.toSeq == Seq(
+        ".segment-0.glog.crc", ".segment-1.glog.crc", "segment-0.glog", "segment-1.glog"))
     val df = spark.read.format("glog").load(p)
-    // no pushed bound: both segments planned
+    def inputPartitions(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          s.inputPartitions.size
+      }
     GlogSource.lastPlannedFiles.set(-1)
     assert(df.count() == 400)
     assert(GlogSource.lastPlannedFiles.get() == 2)
-    // offset lower bound clearing segment-0's max drops the FILE
-    GlogSource.lastPlannedFiles.set(-1)
-    assert(df.filter(col("offs") >= 200L).count() == 200)
-    assert(GlogSource.lastPlannedFiles.get() == 1)
-    // offset UPPER bound (the new LessThan pushdown) drops segment-1
-    GlogSource.lastPlannedFiles.set(-1)
-    assert(df.filter(col("offs") < 200L).count() == 200)
-    assert(GlogSource.lastPlannedFiles.get() == 1)
-    // time lower bound clearing segment-0's maxTms drops it too
-    GlogSource.lastPlannedFiles.set(-1)
-    assert(df.filter(col("tms") >= 1700000200000L).count() == 200)
-    assert(GlogSource.lastPlannedFiles.get() == 1)
-    // advisory contract: a deleted sidecar only disables pruning — the
-    // segment opens again and the batch-header skips keep results exact
-    // (this pins the batch-level skip tier under the file-level one)
-    fs.delete(Glog.statsPath(seg0), false)
-    GlogSource.lastPlannedFiles.set(-1)
-    Glog.batchesSkipped.set(0)
-    assert(df.filter(col("offs") >= 200L).count() == 200)
-    assert(GlogSource.lastPlannedFiles.get() == 2)
-    assert(Glog.batchesSkipped.get() > 0)
+    assert(inputPartitions(df).contains(1))
+    // each bound clears one whole segment: its batches are skipped from
+    // their headers and the result is exact
+    for ((bound, want) <- Seq((col("offs") >= 200L, 200L until 400L),
+        (col("offs") < 200L, 0L until 200L),
+        (col("tms") >= 1700000200000L, 200L until 400L))) {
+      GlogSource.lastPlannedFiles.set(-1)
+      Glog.batchesSkipped.set(0)
+      val got = df.filter(bound)
+      assert(got.select("offs").as[Long].collect().sorted.toSeq == want)
+      assert(GlogSource.lastPlannedFiles.get() == 2)
+      assert(inputPartitions(got).contains(1))
+      assert(Glog.batchesSkipped.get() > 0)
+    }
+  }
+
+  test("a stale .glogx stats file beside a segment drops no rows") {
+    import spark.implicits._
+    val p = java.nio.file.Files.createTempDirectory("graft_glog_stale").toString
+    segment(p, "segment-0", (0L until 200L).map(i =>
+      Glog.Rec("t", 0L, i, 1000L + i, 1700000000000L + i * 1000L, s"k$i", s"v$i")))
+    // the stats file an older writer could leave paired with a rewritten
+    // segment: it claims offsets [0, 0] and a max time of 0 (written
+    // through the checksummed filesystem, so its checksum is valid)
+    val stale = new org.apache.hadoop.fs.Path(s"$p/topic=t/part=0/segment-0.glogx")
+    val o = stale.getFileSystem(spark.sparkContext.hadoopConfiguration).create(stale, true)
+    o.write("v1 0 0 0\n".getBytes("UTF-8")); o.close()
+    val df = spark.read.format("glog").load(p)
+    assert(df.filter(col("offs") >= 100L).select("offs").as[Long].collect()
+      .sorted.toSeq == (100L until 200L))
+    assert(df.filter(col("tms") >= 1700000150000L).select("offs").as[Long]
+      .collect().sorted.toSeq == (150L until 200L))
+    val q = spark.readStream.format("glog").load(p)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("graft_glog_stale").start()
+    q.processAllAvailable()
+    q.stop()
+    assert(spark.table("graft_glog_stale").select("offs").as[Long].collect()
+      .sorted.toSeq == (0L until 200L))
+  }
+
+  test("rate-limited stream windows run contiguously across segment boundaries") {
+    import spark.implicits._
+    val p = java.nio.file.Files.createTempDirectory("graft_glog_window").toString
+    for ((lo, i) <- Seq(0L, 200L, 400L).zipWithIndex)
+      Glog.writeSegments(spark.createDataset((lo until lo + 200L).map(o =>
+        Glog.Rec("t", 0L, o, 1000L + o, 1700000000000L + o, s"k$o", s"v$o"))),
+        p, s"segment-$i")
+    val slices = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+    val q = spark.readStream.format("glog")
+      .option("maxRecordsPerTrigger", "150").load(p)
+      .writeStream.outputMode("append")
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val offs = b.select("offs").as[Long].collect().sorted.toSeq
+        if (offs.nonEmpty) slices += offs
+        ()
+      }
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    // every offset exactly once, in capped slices (cap + the one-record
+    // progress floor)
+    assert(slices.flatten.sorted == (0L until 600L))
+    assert(slices.size >= 4 && slices.forall(_.size <= 151))
+    // each trigger's slice is one contiguous offset range, and some
+    // slice spans each segment boundary
+    slices.foreach(s => assert(s == (s.head to s.last)))
+    for (b <- Seq(200L, 400L)) assert(slices.exists(s => s.head < b && s.last >= b))
   }
 
   test("micro-batch stream tails the store: initial load + appended segment") {
@@ -455,18 +505,20 @@ class GlogSpec extends AnyFunSuite {
     val in = java.nio.file.Files.createTempDirectory("graft_glog_store").toString
     segment(in, "segment-b0", Seq(rec(0, "a"), rec(1, "b")))
     val pDir = java.nio.file.Paths.get(in, "topic=t", "part=0")
-    assert(java.nio.file.Files.exists(pDir.resolve("segment-b0.glogx")))
     // a zombie attempt's temp file whose records would change the result,
     // and _SUCCESS markers at the root and in the partition directory
     segment(in, "segment-b1", Seq(rec(2, "a")))
     java.nio.file.Files.move(pDir.resolve("segment-b1.glog"),
       pDir.resolve(".segment-b1.glog.tmp-zombie"))
-    java.nio.file.Files.delete(pDir.resolve("segment-b1.glogx"))
     for (d <- Seq(java.nio.file.Paths.get(in), pDir))
       java.nio.file.Files.createFile(d.resolve("_SUCCESS"))
     val out = freshPath("graft_glog_store_c")
     graft.sources.GlogOps.compactStore(spark, in, out)
     assert(readAll(out).map(_.offs) == Seq(0L, 1L))
+    // a compaction commits one file: the segment and its checksum
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(out, "topic=t", "part=0"))
+      .toArray.map(_.toString.split('/').last).sorted.toSeq ==
+      Seq(".segment-0.glog.crc", "segment-0.glog"))
     // a store with no partition directories writes nothing
     val empty = java.nio.file.Files.createTempDirectory("graft_glog_empty")
     java.nio.file.Files.createFile(empty.resolve("_SUCCESS"))

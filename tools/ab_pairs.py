@@ -1,0 +1,141 @@
+#!/usr/bin/env python3
+"""A/B a change against its parent with perfbench, in alternating pairs.
+
+Runs one workload once per seed in each of two checkouts. The parent runs
+first on odd pairs and the change first on even ones, so a drift of the host
+during the session falls on both sides alike. Each run's last stdout line
+(perfbench's JSON result) is appended to a log, one JSON object per line.
+Then, for each end-to-end metric of BENCHMARK.json, it prints the median and
+quartiles of each side and the number of pairs the change won, and flags a
+median that moved by more than the parent's quartile spread.
+
+    python3 tools/ab_pairs.py PARENT_DIR CHANGE_DIR --workload log_store \\
+        --seeds 1-10 --log ab_log_store.jsonl
+    python3 tools/ab_pairs.py --summarize ab_log_store.jsonl
+
+PARENT_DIR and CHANGE_DIR are full checkouts (e.g. `git archive <parent> |
+tar -x -C DIR`). The command and `run_seconds` come from CHANGE_DIR's
+BENCHMARK.json. The script only reads perfbench's output.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import time
+
+
+def parse_seeds(text):
+    seeds = []
+    for part in text.split(","):
+        lo, _, hi = part.partition("-")
+        seeds += range(int(lo), int(hi or lo) + 1)
+    return seeds
+
+
+def quartiles(values):
+    if len(values) < 2:
+        v = values[0]
+        return v, v, v
+    q1, med, q3 = statistics.quantiles(values, n=4)
+    return q1, statistics.median(values), q3
+
+
+def run_once(checkout, spec, workload, seed, trace):
+    cmd = spec["command"] + ["--workload", workload, "--seed", str(seed),
+                             "--seconds", str(spec["run_seconds"]), "--trace", str(trace)]
+    t0 = time.time()
+    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                          stderr=subprocess.DEVNULL, text=True)
+    lines = proc.stdout.strip().splitlines()
+    return {"wall_s": round(time.time() - t0, 1), "exit": proc.returncode,
+            "line": lines[-1] if lines else ""}
+
+
+def run_pairs(a, spec):
+    sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    with open(a.log, "a") as log:
+        for i, seed in enumerate(parse_seeds(a.seeds), start=1):
+            order = ["parent", "change"] if i % 2 else ["change", "parent"]
+            for side in order:
+                r = run_once(sides[side], spec, a.workload, seed, a.trace)
+                r.update(pair=i, seed=seed, side=side, first=order[0] == side,
+                         workload=a.workload)
+                log.write(json.dumps(r) + "\n")
+                log.flush()
+                print(f"pair {i} seed {seed} {side}: exit {r['exit']}, {r['wall_s']} s",
+                      file=sys.stderr)
+
+
+def summarize(log_path, spec):
+    runs = {}
+    with open(log_path) as fh:
+        for line in fh:
+            r = json.loads(line)
+            try:
+                r["result"] = json.loads(r["line"])
+            except ValueError:
+                r["result"] = None
+            runs[(r["workload"], r["seed"], r["side"])] = r
+    for workload in sorted({k[0] for k in runs}):
+        seeds = sorted({k[1] for k in runs if k[0] == workload})
+        print(f"== {workload}: {len(seeds)} seeds ==")
+        for side in ("parent", "change"):
+            rs = [runs.get((workload, s, side)) for s in seeds]
+            ok = [r for r in rs if r and r["result"] and r["result"]["correct"]]
+            failed = sum(r["result"]["failed"] for r in rs if r and r["result"])
+            print(f"{side}: {len(ok)}/{len(seeds)} runs correct, {failed} failed ops")
+        print(f"{'metric':<16} {'parent median [q1, q3]':>30} "
+              f"{'change median [q1, q3]':>30} {'won':>6}  note")
+        for m in spec["end_to_end"]:
+            name, lower = m["name"], m["better"] == "lower"
+            pairs = []
+            for s in seeds:
+                p, c = runs.get((workload, s, "parent")), runs.get((workload, s, "change"))
+                if p and c and p["result"] and c["result"] and \
+                        name in p["result"]["metrics"] and name in c["result"]["metrics"]:
+                    pairs.append((p["result"]["metrics"][name]["value"],
+                                  c["result"]["metrics"][name]["value"]))
+            if not pairs:
+                continue
+            pq = quartiles([p for p, _ in pairs])
+            cq = quartiles([c for _, c in pairs])
+            won = sum((c < p) if lower else (c > p) for p, c in pairs)
+            delta = cq[1] - pq[1]
+            note = "beyond parent IQR" if abs(delta) > pq[2] - pq[0] else ""
+            if abs(delta) > m.get("bound", float("inf")) * abs(pq[1]) and \
+                    (delta > 0) == lower:
+                note = "WORSE THAN BOUND"
+            fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
+            print(f"{name:<16} {fmt(pq):>30} {fmt(cq):>30} {won:>3}/{len(pairs):<2}  {note}")
+
+
+def main():
+    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("parent", nargs="?")
+    p.add_argument("change", nargs="?")
+    p.add_argument("--workload")
+    p.add_argument("--seeds", default="1-10", help="e.g. 1-10 or 1,3,5-7")
+    p.add_argument("--trace", type=int, default=0)
+    p.add_argument("--log", default="ab_pairs.jsonl",
+                   help="JSON-lines log the runs are appended to")
+    p.add_argument("--summarize", metavar="LOG",
+                   help="print the summary of an existing log and run nothing")
+    a = p.parse_args()
+    if a.summarize:
+        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        with open(os.path.join(here, "BENCHMARK.json")) as fh:
+            summarize(a.summarize, json.load(fh))
+        return 0
+    if not (a.parent and a.change and a.workload):
+        p.error("PARENT_DIR, CHANGE_DIR and --workload are required")
+    with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    run_pairs(a, spec)
+    summarize(a.log, spec)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -58,6 +58,46 @@ object Tables {
     slot(artifactPlans, spark, path, fingerprintPath(spark, path))(
       spark.read.parquet(path))
 
+  /** Completion marker of a [[store]] root, the last file a build writes. */
+  private[graft] val StoreMarker = "_GRAFT_STORE_OK"
+
+  /** The one build-once rule for a derived store persisted across JVMs
+    * (the glog copy of the log view, the IVF/PQ index, the BPE
+    * vocabulary). The root is `tmpdir/<name>/<hash of canonical dir>/
+    * <fingerprint of the source table>`, so data rewritten in place, or a
+    * second dataset whose path merely spells alike, never reads another
+    * build. A root is served only once [[StoreMarker]] exists. Otherwise,
+    * or when `rebuild` forces it, the build sweeps this dataset's other
+    * fingerprints, drops the old marker, clears the root, runs `write`
+    * into it and creates the marker last through java.nio (no Hadoop
+    * `.crc`, no forked `chmod`): an interrupted build is never served.
+    */
+  def store(spark: SparkSession, name: String, dir: String, table: String,
+      rebuild: Boolean = false)(write: java.io.File => Unit): java.io.File = {
+    val canon = new java.io.File(dir).getCanonicalPath
+    val parent = new java.io.File(new java.io.File(
+      sys.props("java.io.tmpdir"), name),
+      java.util.UUID.nameUUIDFromBytes(canon.getBytes("UTF-8")).toString)
+    val root = new java.io.File(parent, fingerprint(spark, dir, table))
+    val marker = root.toPath.resolve(StoreMarker)
+    if (rebuild || !java.nio.file.Files.exists(marker)) {
+      Option(parent.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName != root.getName).foreach(deleteTree)
+      // Marker first: a clear cut short must not leave a marked, partial root.
+      java.nio.file.Files.deleteIfExists(marker)
+      deleteTree(root)
+      java.nio.file.Files.createDirectories(root.toPath)
+      write(root)
+      java.nio.file.Files.createFile(marker)
+    }
+    root
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
+    f.delete()
+  }
+
   /** [[t]] with the scan conditionally repartitioned to the session's
     * cores — the guide §2.5 "unsplittable input" fix. The test tables are
     * single-row-group parquet files, so a scan is ONE task however many

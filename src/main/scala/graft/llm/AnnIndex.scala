@@ -30,42 +30,19 @@ import org.apache.spark.sql.functions._
   * same integer-quantized distances, same tie-breaks), checked by the
   * same DuckDB oracle.
   *
-  * The index directory is keyed by (dataset path, embeddings content
-  * fingerprint), so a regenerated dataset re-builds instead of serving a
-  * stale index; older fingerprints of the same dataset are swept on
-  * build.
+  * The index is one [[graft.Tables.store]] keyed by (dataset path,
+  * embeddings content fingerprint): a regenerated dataset rebuilds
+  * instead of serving a stale index, older fingerprints of the same
+  * dataset are swept on build, and a root without its completion marker
+  * (an interrupted build) is cleared and rebuilt, never served.
   */
 object AnnIndex {
 
-  /** Index root for (dataset, content): `tmp/graft_ann_index/<dirhash>/
-    * <fingerprint>`. Two levels so the stale-sweep can delete old
-    * fingerprints of THIS dataset without touching other datasets' live
-    * indexes (bench runs hold several SF dirs in one session).
+  /** Build the three index artifacts into an empty `root`. Training and
+    * encode run through the session's fingerprint-cached frames, so a
+    * session that already ran the ANN family pays only the writes here.
     */
-  private[llm] def indexRoot(spark: SparkSession, dir: String): java.io.File = {
-    val canon = new java.io.File(dir).getCanonicalPath
-    val dirHash = java.util.UUID.nameUUIDFromBytes(
-      canon.getBytes("UTF-8")).toString
-    val fp = graft.Tables.fingerprint(spark, dir, "embeddings")
-    new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_ann_index"), s"$dirHash/$fp")
-  }
-
-  private def marker(root: java.io.File): java.io.File =
-    new java.io.File(root, "_GRAFT_INDEX_OK")
-
-  /** Build the three index artifacts under `root` (overwrite), then drop
-    * the completion marker. Training and encode run through the session's
-    * fingerprint-cached frames, so a session that already ran the ANN
-    * family pays only the writes here.
-    */
-  private[llm] def materialize(spark: SparkSession, dir: String,
-      root: java.io.File): Unit = {
-    // Sweep stale fingerprints of this dataset before writing the new one.
-    val parent = root.getParentFile
-    Option(parent.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName != root.getName)
-      .foreach(deleteRecursively)
+  private def build(spark: SparkSession, dir: String, root: java.io.File): Unit = {
     Clustering.fittedCentroids(spark, dir)
       .select("cid", "cv", "cnrm")
       .coalesce(1)
@@ -85,38 +62,30 @@ object AnnIndex {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("cell")
       .parquet(new java.io.File(root, "codes").toString)
-    marker(root).createNewFile()
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
-
-  /** The index location for this (dataset, content), building it first if
-    * the completion marker is absent — the only path by which a probe can
-    * ever pay build cost.
+  /** The index root for this (dataset, embeddings content), built first
+    * through [[graft.Tables.store]] when it has no completion marker (the
+    * only path by which a probe can ever pay build cost) or when
+    * `rebuild` forces it.
     */
-  private[graft] def ensure(spark: SparkSession, dir: String): java.io.File = {
-    val root = indexRoot(spark, dir)
-    if (!marker(root).exists()) {
-      // Loud: a probe that pays materialize() is a BUILD+probe run, and a
+  private[graft] def ensure(spark: SparkSession, dir: String,
+      rebuild: Boolean = false): java.io.File =
+    graft.Tables.store(spark, "graft_ann_index", dir, "embeddings", rebuild) { root =>
+      // Loud: a probe that pays the build is a BUILD+probe run, and a
       // timing that includes it must be distinguishable from a pure probe.
-      System.err.println(s"[ann-index] probe missed the persisted index; " +
-        s"building at $root")
-      materialize(spark, dir, root)
+      if (!rebuild) System.err.println(
+        s"[ann-index] probe missed the persisted index; building at $root")
+      build(spark, dir, root)
     }
-    root
-  }
 
-  /** `ivfpq_index_persist`: (re)build the persisted index, then report
+  /** `ivfpq_index_persist`: rebuild the persisted index, then report
     * per-cell statistics READ BACK from the stored `codes/` partitions —
     * (cell, n_vecs, n_code_rows) — proving the round trip, not echoing
     * the in-session frames. ~K rows.
     */
   def indexPersist(spark: SparkSession, dir: String): DataFrame = {
-    val root = indexRoot(spark, dir)
-    materialize(spark, dir, root)
+    val root = ensure(spark, dir, rebuild = true)
     spark.read.parquet(new java.io.File(root, "codes").toString)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(countDistinct("vec_id").as("n_vecs"),

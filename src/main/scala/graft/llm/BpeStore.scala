@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * produced — 3 rows here) and, operationally, the encoded vocabulary
   * `(word, n_tok)` that the encode path actually consumes (bounded —
   * distinct words, never corpus rows). `bpe_vocab_persist` writes both
-  * as parquet keyed by the documents content fingerprint;
+  * into one [[graft.Tables.store]] keyed by the documents content
+  * fingerprint (rebuilt when the corpus changes, never served half
+  * written);
   * `bpe_encode_apply` is the apply-only path: it reads the stored
   * vocabulary and pays ONLY the corpus scan + broadcast join + per-doc
   * rollup — no trainer rounds, no vocabulary re-encode. At 100 TB the
@@ -22,62 +24,31 @@ import org.apache.spark.sql.functions._
   */
 object BpeStore {
 
-  /** Store root for (dataset, content): the [[AnnIndex.indexRoot]]
-    * two-level layout (`tmp/graft_bpe_store/<dirhash>/<fingerprint>`)
-    * so the stale sweep is per-dataset.
+  /** The store root for this (dataset, documents content) — one
+    * [[graft.Tables.store]] holding `merges/` (the 3-row merge table) and
+    * `vocab/` (the bounded encoded vocabulary) — built first when it has
+    * no completion marker or when `rebuild` forces it.
     */
-  private[llm] def storeRoot(spark: SparkSession, dir: String): java.io.File = {
-    val canon = new java.io.File(dir).getCanonicalPath
-    val dirHash = java.util.UUID.nameUUIDFromBytes(
-      canon.getBytes("UTF-8")).toString
-    val fp = graft.Tables.fingerprint(spark, dir, "documents")
-    new java.io.File(new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_bpe_store"), s"$dirHash/$fp")
-  }
+  private[graft] def ensure(spark: SparkSession, dir: String,
+      rebuild: Boolean = false): java.io.File =
+    graft.Tables.store(spark, "graft_bpe_store", dir, "documents", rebuild) { root =>
+      TextAnalysis.bpeMerges(spark, dir)
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite)
+        .parquet(new java.io.File(root, "merges").toString)
+      TextAnalysis.encodedVocab(spark, dir)
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite)
+        .parquet(new java.io.File(root, "vocab").toString)
+    }
 
-  private def marker(root: java.io.File): java.io.File =
-    new java.io.File(root, "_GRAFT_BPE_OK")
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
-
-  /** Write `merges/` (the 3-row merge table) and `vocab/` (the bounded
-    * encoded vocabulary), sweep stale fingerprints of this dataset,
-    * then drop the completion marker.
-    */
-  private[llm] def materialize(spark: SparkSession, dir: String,
-      root: java.io.File): Unit = {
-    val parent = root.getParentFile
-    Option(parent.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName != root.getName)
-      .foreach(deleteRecursively)
-    TextAnalysis.bpeMerges(spark, dir)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(new java.io.File(root, "merges").toString)
-    TextAnalysis.encodedVocab(spark, dir)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(new java.io.File(root, "vocab").toString)
-    marker(root).createNewFile()
-  }
-
-  private[graft] def ensure(spark: SparkSession, dir: String): java.io.File = {
-    val root = storeRoot(spark, dir)
-    if (!marker(root).exists()) materialize(spark, dir, root)
-    root
-  }
-
-  /** `bpe_vocab_persist`: (re)build the store, then report the merge
+  /** `bpe_vocab_persist`: rebuild the store, then report the merge
     * table READ BACK from `merges/` decorated with the stored
     * vocabulary's rollup (words, total tokens) — the round-trip proof
     * for both artifacts. 3 rows.
     */
   def vocabPersist(spark: SparkSession, dir: String): DataFrame = {
-    val root = storeRoot(spark, dir)
-    materialize(spark, dir, root)
+    val root = ensure(spark, dir, rebuild = true)
     val vs = spark.read.parquet(new java.io.File(root, "vocab").toString)
       .agg(count(lit(1)).as("n_vocab_words"),
         sum("n_tok").cast("long").as("n_vocab_tokens"))

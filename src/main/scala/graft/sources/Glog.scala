@@ -334,20 +334,14 @@ object Glog {
     }
   }
 
-  /** Materialize the canonical log view as a glog store (`_SUCCESS`
-    * marker makes it idempotent).
+  /** Write the canonical log view of `dir` as a glog store at `outPath`
+    * (one `segment-0` per partition). Whether a store is current is the
+    * caller's rule; [[GlogOps.glogRead]] keeps its copy in a
+    * [[graft.Tables.store]].
     */
   def materialize(spark: SparkSession, dir: String, outPath: String): Unit = {
     import spark.implicits._
-    val success = new org.apache.hadoop.fs.Path(outPath, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(success)) return
-    writeSegments(
-      LogOps.log(spark, dir)
-        .select(col("topic"), col("part"), col("offs"), col("event_id"),
-          col("tms"), col("k"), col("v")).as[Rec],
-      outPath, "segment-0")
-    fs.create(success, true).close()
+    writeSegments(LogOps.logView(spark, dir).as[Rec], outPath, "segment-0")
   }
 
   /** Delete `segment-b<id>.glog` files with id >= fromBatchId (and stale

@@ -9,23 +9,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 /** Driver-checked query over the [[Glog]] store: materialize the log into
-  * the engine's own segment format (idempotent), read it back through the
-  * DataSource V2 connector, and verify the round trip hash-exactly against
-  * the DuckDB oracle computing the same log view from the raw events.
+  * the engine's own segment format, read it back through the DataSource V2
+  * connector, and verify the round trip hash-exactly against the DuckDB
+  * oracle computing the same log view from the raw events.
   */
 object GlogOps {
 
-  private def storePath(dir: String): String =
-    // java.io.tmpdir (the AnnIndex/BpeStore spelling, identical to the old
-    // hardcoded /tmp on a stock JVM) so parallel test JVMs with private
-    // tmpdirs never share a half-built store.
-    new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_glog"), dir.replaceAll("[^a-zA-Z0-9.]", "_")).toString
-
+  /** The log view of `dir` read back from its glog copy. The copy is a
+    * [[graft.Tables.store]] keyed by the dataset and the `events` content
+    * fingerprint, under a name that carries the batch format
+    * ([[Glog.MagicO]]): rewritten events, another dataset or a new batch
+    * header each read their own build, and a copy without its completion
+    * marker is rebuilt, never read.
+    */
   def glogRead(spark: SparkSession, dir: String): DataFrame = {
-    val p = storePath(dir)
-    Glog.materialize(spark, dir, p)
-    spark.read.format("glog").load(p)
+    val root = graft.Tables.store(spark, s"graft_glog_v${Glog.MagicO}", dir,
+      "events")(r => Glog.materialize(spark, dir, r.toString))
+    spark.read.format("glog").load(root.toString)
       .select("topic", "part", "offs", "event_id", "tms", "k", "v")
   }
 

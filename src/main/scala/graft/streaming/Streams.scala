@@ -809,19 +809,24 @@ object Streams {
   private def eventStream(spark: SparkSession, dir: String): DataFrame =
     tableStream(spark, dir, "events")
 
+  /** Run a streaming query to the end of its input into the memory sink
+    * `name` (stopped even if the run fails) and return the sink's table.
+    */
+  private def runToMemory(ds: Dataset[_], mode: OutputMode,
+      name: String): DataFrame = {
+    val q = ds.writeStream.outputMode(mode).format("memory").queryName(name)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    ds.sparkSession.table(name)
+  }
+
   /** Run [[cdcPerKey]] as a real streaming query and return the emitted
     * change rows.
     */
   def runCdcStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val stream = eventStream(spark, dir).as[Ev]
-    val q = cdcPerKey(spark, stream).writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory").queryName("graft_cdc_stream")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_cdc_stream")
+    runToMemory(cdcPerKey(spark, stream), OutputMode.Append, "graft_cdc_stream")
   }
 
   final case class SessState(start: Long, last: Long, n: Long)
@@ -910,15 +915,10 @@ object Streams {
   def runCompactionStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val stream = eventStream(spark, dir).as[Ev]
-    val q = latestPerKey(spark, stream).writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory").queryName("graft_compact_stream")
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // Update-mode memory sink may hold several versions per key; the final
     // state is the max per key.
-    spark.table("graft_compact_stream")
+    runToMemory(latestPerKey(spark, stream), OutputMode.Update,
+      "graft_compact_stream")
       .groupBy("topic", "k")
       .agg(max(struct(col("tms"), col("event_id"), col("v"))).as("m"))
       .select(col("topic"), col("k"), col("m.event_id"), col("m.tms"), col("m.v"))
@@ -941,7 +941,7 @@ object Streams {
       .select(col("event_type").as("topic"),
         col("user_id").cast("string").as("k"))
       .as[(String, String)]
-    val q = stream.groupByKey(_._1)
+    val summaries = stream.groupByKey(_._1)
       .mapGroupsWithState[(Long, Map[String, Long]), (String, Long, Map[String, Long])](
         GroupStateTimeout.NoTimeout) {
         case (topic, it, state: GroupState[(Long, Map[String, Long])]) =>
@@ -953,16 +953,11 @@ object Streams {
           (topic, ver + 1, out)
       }
       .toDF("topic", "ver", "sketch")
-      .writeStream.outputMode("update")
-      .format("memory").queryName("graft_stream_hh")
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // update-mode memory sink keeps one row per trigger; the freshest
     // version per topic is the live summary.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("topic").orderBy(col("ver").desc)
-    spark.table("graft_stream_hh")
+    runToMemory(summaries, OutputMode.Update, "graft_stream_hh")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("topic"), explode(col("sketch")).as(Seq("k", "est")))
@@ -980,17 +975,11 @@ object Streams {
     val stream = eventStream(spark, dir)
     val dim = broadcast(t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment")))
-    val q = stream
+    runToMemory(stream
       .select(col("event_id"), col("user_id"), col("event_type"))
       .join(dim, col("user_id") === col("c_custkey"), "left")
       .groupBy("event_type", "c_mktsegment")
-      .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_static")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_stream_static")
+      .agg(count(lit(1)).as("n")), OutputMode.Complete, "graft_stream_static")
   }
 
   /** Continuous latency-histogram sketch: the streaming form of
@@ -1006,13 +995,8 @@ object Streams {
     val samples = graft.log.BrokerOps.withLatency(
       eventStream(spark, dir)
         .select(col("event_id"), col("props").as("v")))
-    val q = graft.log.BrokerOps.hdrHist(samples)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_latency")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_stream_latency")
+    runToMemory(graft.log.BrokerOps.hdrHist(samples), OutputMode.Complete,
+      "graft_stream_latency")
   }
 
   /** Streaming glog sink: append each micro-batch to a glog store as new
@@ -1069,17 +1053,11 @@ object Streams {
     * counts current as segments append — the continuous form of
     * ListOffsets / the input side of a lag monitor.
     */
-  def runLogEndStream(spark: SparkSession, storePath: String): DataFrame = {
-    val q = spark.readStream.format("glog").load(storePath)
+  def runLogEndStream(spark: SparkSession, storePath: String): DataFrame =
+    runToMemory(spark.readStream.format("glog").load(storePath)
       .groupBy("topic", "part")
-      .agg((max("offs") + 1L).as("log_end"), count(lit(1)).as("n"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_log_end")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_log_end")
-  }
+      .agg((max("offs") + 1L).as("log_end"), count(lit(1)).as("n")),
+      OutputMode.Complete, "graft_log_end")
 
   /** Continuous consumer-lag monitor: the lag-monitor topology every Kafka
     * operator runs — the glog tail's live log-end joined against the
@@ -1094,17 +1072,12 @@ object Streams {
       storePath: String): DataFrame = {
     val committed = broadcast(graft.coordinator.Groups.commits(spark, dir)
       .select("group_id", "topic", "part", "committed"))
-    val q = spark.readStream.format("glog").load(storePath)
+    runToMemory(spark.readStream.format("glog").load(storePath)
       .join(committed, Seq("topic", "part"))
       .groupBy("group_id", "topic", "part", "committed")
       .agg((max("offs") + 1L).as("log_end"))
-      .withColumn("lag", col("log_end") - col("committed"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_consumer_lag")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table("graft_consumer_lag")
+      .withColumn("lag", col("log_end") - col("committed")),
+      OutputMode.Complete, "graft_consumer_lag")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -22,7 +22,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("index layout: marker + cell-partitioned codes directories") {
     val root = AnnIndex.ensure(spark, dir)
-    assert(new java.io.File(root, "_GRAFT_INDEX_OK").exists())
+    assert(new java.io.File(root, Tables.StoreMarker).exists())
     val cellDirs = new java.io.File(root, "codes").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty, "codes/ must be partitioned by cell")
@@ -55,11 +55,23 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("stale fingerprint sweeps; fresh data rebuilds") {
     val root = AnnIndex.ensure(spark, dir)
+    val marker = new java.io.File(root, Tables.StoreMarker)
     // plant a stale sibling fingerprint dir; a rebuild must sweep it
     val stale = new java.io.File(root.getParentFile, "deadbeef-stale")
     stale.mkdirs()
     AnnIndex.indexPersist(spark, dir)
     assert(!stale.exists(), "stale fingerprint dir must be swept on build")
-    assert(new java.io.File(root, "_GRAFT_INDEX_OK").exists())
+    assert(marker.exists())
+    assert(StoreSpecs.markers(root.getParentFile) == 1,
+      "a forced persist must leave exactly one marker")
+    // a fingerprint dir holding junk but no marker (an interrupted build)
+    // is cleared and rebuilt, never served
+    java.nio.file.Files.delete(marker.toPath)
+    val junk = new java.io.File(root, "junk")
+    junk.createNewFile()
+    assert(AnnIndex.ensure(spark, dir) == root)
+    assert(!junk.exists(), "an unmarked index root must be cleared")
+    assert(marker.exists())
+    assert(AnnIndex.annIvfPqProbe(spark, dir).count() > 0)
   }
 }

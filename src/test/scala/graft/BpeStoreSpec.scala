@@ -21,7 +21,7 @@ class BpeStoreSpec extends AnyFunSuite {
 
   test("store layout: marker + merges + vocab round-trip") {
     val root = BpeStore.ensure(spark, dir)
-    assert(new java.io.File(root, "_GRAFT_BPE_OK").exists())
+    assert(new java.io.File(root, Tables.StoreMarker).exists())
     val merges = spark.read.parquet(new java.io.File(root, "merges").toString)
     assert(merges.count() == 3)
     val stats = BpeStore.vocabPersist(spark, dir).collect()
@@ -42,5 +42,37 @@ class BpeStoreSpec extends AnyFunSuite {
       s"vocab re-encode leaked into the apply plan:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
       s"stored vocab no longer broadcasts into the corpus scan:\n$plan")
+  }
+
+  test("stale fingerprint sweeps; partial store rebuilds") {
+    val root = BpeStore.ensure(spark, dir)
+    val marker = new java.io.File(root, Tables.StoreMarker)
+    val stale = new java.io.File(root.getParentFile, "deadbeef-stale")
+    stale.mkdirs()
+    BpeStore.vocabPersist(spark, dir)
+    assert(!stale.exists(), "stale fingerprint dir must be swept on build")
+    assert(StoreSpecs.markers(root.getParentFile) == 1,
+      "a forced persist must leave exactly one marker")
+    // a fingerprint dir holding junk but no marker (an interrupted build)
+    // is cleared and rebuilt, never served
+    java.nio.file.Files.delete(marker.toPath)
+    val junk = new java.io.File(root, "junk")
+    junk.createNewFile()
+    assert(BpeStore.ensure(spark, dir) == root)
+    assert(!junk.exists(), "an unmarked store root must be cleared")
+    assert(marker.exists())
+    val a = TextAnalysis.bpeEncode(spark, dir)
+    val b = BpeStore.encodeApply(spark, dir)
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+  }
+}
+
+/** Shared checks of the persisted-store specs. */
+object StoreSpecs {
+  /** Completion markers anywhere under `dir`. */
+  def markers(dir: java.io.File): Long = {
+    val s = java.nio.file.Files.walk(dir.toPath)
+    try s.filter(_.getFileName.toString == Tables.StoreMarker).count()
+    finally s.close()
   }
 }

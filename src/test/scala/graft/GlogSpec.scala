@@ -28,6 +28,36 @@ class GlogSpec extends AnyFunSuite {
     assert(got.count() > 0)
   }
 
+  test("glog_read reads the events it is given: rewritten in place, or at a look-alike path") {
+    import java.nio.file.{Files, Paths}
+    import graft.sources.GlogOps
+    val src = s"$dir/events.parquet"
+    def same(d: String) = {
+      val got = GlogOps.glogRead(spark, d)
+      val want = LogOps.logView(spark, d)
+      got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0
+    }
+    def evenEvents(d: String) = spark.read.parquet(src)
+      .filter(col("event_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$d/events.parquet")
+    val tmp = Files.createTempDirectory("graft_glog_data")
+    // A copy of the dataset, read once, then its events rewritten in place.
+    val copy = Files.createDirectories(tmp.resolve("copy"))
+    Files.copy(Paths.get(src), copy.resolve("events.parquet"))
+    assert(same(copy.toString))
+    val before = GlogOps.glogRead(spark, copy.toString).count()
+    evenEvents(copy.toString)
+    assert(same(copy.toString), "rewritten events must rebuild the glog copy")
+    assert(GlogOps.glogRead(spark, copy.toString).count() < before)
+    // Two datasets whose paths sanitize alike, holding different events.
+    val flat = Files.createDirectories(tmp.resolve("x_y"))
+    val nested = Files.createDirectories(tmp.resolve("x").resolve("y"))
+    Files.copy(Paths.get(src), flat.resolve("events.parquet"))
+    evenEvents(nested.toString)
+    assert(same(flat.toString))
+    assert(same(nested.toString), "x/y must not read x_y's glog copy")
+  }
+
   test("topic + part equality filters prune to a single segment file") {
     GlogSource.lastPlannedFiles.set(-1)
     val n = glog.filter(col("topic") === "click" && col("part") === 3L).count()

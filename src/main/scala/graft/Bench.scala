@@ -6,8 +6,11 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    // Optional comma-separated query filter for ad-hoc timing runs; a
+    // full benchmark run sets none. Checked before the session starts.
+    val only = SparkEntry.queryFilter(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession.fromEnv()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions") // = cores
     // Warm the JVM/codegen once so measured times reflect steady state.
     try SparkEntry.entry(spark).count()
     catch { case e: Throwable => System.err.println(s"[bench] warmup skipped: ${e.getMessage}") }
@@ -15,13 +18,6 @@ object Bench {
     // (cgroup throttle, page-cache miss) in one pass can inflate a 0.7 s
     // query to 10 s; the min of two runs is the steady-state number the
     // baseline comparison is about.
-    // Optional comma-separated query filter (local stress runs only; the
-    // driver sets no filter and times everything). An empty/blank value is
-    // NO filter — a bare `SPARK_GRAFT_ONLY=` export must not silently
-    // produce an empty benchmark pass.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     def pass(): Seq[(String, Double, Boolean)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }

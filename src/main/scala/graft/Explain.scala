@@ -10,8 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q1_agg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val spark = GraftSession.fromEnv()
     names.foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries(n)(spark, dir).explain("formatted")

@@ -4,13 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session extensions registering graft's native functions, so a user can
-  * enable the whole library with
+/** Session extensions: the one way a session gets graft's native functions
+  * and its as-of join strategy. [[GraftSession.build]] installs them; any
+  * other session enables them with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`) and call
-  * every native function from SQL without touching Scala. The function
-  * list itself lives in [[graft.functions.NativeFunctions]] — one source
-  * for this path and the in-session register helpers.
+  * `SparkSession.builder().withExtensions(new GraftExtensions)`), and
+  * `newSession()` inherits them. The function list itself lives in
+  * [[graft.functions.NativeFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -30,6 +30,14 @@ object GraftSession {
   private[graft] val InitParts =
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
+  /** The session Bench, Verify and Explain run in: `local[n]` with n =
+    * `SPARK_GRAFT_CPUS` (default 4), the one place that env name is read.
+    */
+  def fromEnv(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    build(s"local[$cpus]", cpus)
+  }
+
   def build(master: String, cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)

@@ -78,6 +78,20 @@ object SparkEntry {
       }
     }
 
+  /** A comma-separated query-name filter (Bench's `SPARK_GRAFT_ONLY`,
+    * Verify's third argument). An absent or blank value is no filter; a
+    * name with no registry entry throws, naming it, so a typo can never
+    * silently drop a query from the run.
+    */
+  def queryFilter(spec: Option[String]): Option[Set[String]] = {
+    val names = spec.toSeq.flatMap(_.split(',')).map(_.trim)
+      .filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    Some(names).filter(_.nonEmpty)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → rows-only check.
     */

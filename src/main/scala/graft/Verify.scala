@@ -10,9 +10,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: comma-separated query-name filter (local fast
     // iteration only; the driver always passes two args = run everything).
-    val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val only = SparkEntry.queryFilter(args.lift(2))
+    val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -58,12 +57,4 @@ case class MinHashSig(child: Expression, k: Int)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
-}
-
-object MinHashSig {
-  /** Idempotently register the full native-function set (canonical list
-    * in [[NativeFunctions]]; registering the superset is idempotent).
-    */
-  def register(spark: SparkSession): Unit =
-    NativeFunctions.registerAll(spark)
 }

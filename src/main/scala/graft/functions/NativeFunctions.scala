@@ -1,15 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** The canonical (name, usage, builder) list of every native function the
-  * library ships — the ONE place a new expression is added. Both
-  * registration paths (the SQL-extensions route in [[graft.GraftExtensions]]
-  * and the in-session [[TextHashes.register]]/[[MinHashSig.register]]/
-  * [[VecDot.register]] helpers) iterate this list, so they can never
-  * drift apart again (they had: the extensions path was missing
-  * intersect_sorted / gram_counts / array_counts).
+  * library ships — the ONE place a new expression is added. A session gets
+  * these functions only through [[graft.GraftExtensions]], which injects
+  * this list when the session is created (and so into every newSession()
+  * derived from it); no builder registers a function itself.
   */
 object NativeFunctions {
 
@@ -38,11 +35,4 @@ object NativeFunctions {
       exprs => GramCounts(exprs.head, intArg(exprs(1)))),
     ("array_counts", "array_counts(arr) - element occurrence counts",
       exprs => ArrayCounts(exprs.head)))
-
-  /** Idempotently register every native function on the session. */
-  def registerAll(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -335,12 +334,4 @@ case class SimHash48(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): SimHash48 =
     copy(child = newChild)
-}
-
-object TextHashes {
-  /** Idempotently register the full native-function set (the canonical
-    * list lives in [[NativeFunctions]]).
-    */
-  def register(spark: SparkSession): Unit =
-    NativeFunctions.registerAll(spark)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -56,12 +55,4 @@ case class VecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
-}
-
-object VecDot {
-  /** Idempotently register the full native-function set (canonical list
-    * in [[NativeFunctions]]; registering the superset is idempotent).
-    */
-  def register(spark: SparkSession): Unit =
-    NativeFunctions.registerAll(spark)
 }

@@ -103,7 +103,6 @@ object AnnIndex {
     * pruning keys on at scale. Results are bit-identical to ann_ivfpq.
     */
   def annIvfPqProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(spark)
     val root = ensure(spark, dir)
     // Plan-cached artifact reads (Tables.artifactPlan): three parquet
     // listings + footer reads per probe otherwise (~85 ms each); the

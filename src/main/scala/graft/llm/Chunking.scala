@@ -128,7 +128,6 @@ object Chunking {
     * NOT assumed broadcastable at 100 TB); per-source frames are tiny.
     */
   def sourceDivergence(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     val tf = t(spark, dir, "documents")
       .select(col("source"),
         explode(expr("array_counts(split(text, ' '))")).as(Seq("tok", "tf")))

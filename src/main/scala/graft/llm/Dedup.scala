@@ -262,8 +262,6 @@ object Dedup {
     */
   private def lshCandidates(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.TextHashes.register(spark)
     val (sigs, cand) = graft.FrameCache.get(spark, dir, "documents", "Dedup.lsh") {
       val s = t(spark, dir, "documents")
         .filter(length(col("text")) >= 5)
@@ -542,7 +540,6 @@ object Dedup {
     * distribution audit; one spelling so the two can never drift.
     */
   private def simhashCandidates(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     val cap = Similarity.PairSubCap
     val simhash = t(spark, dir, "documents")
       .select(col("doc_id"), expr("simhash48(split(text, ' '))").as("simhash"))

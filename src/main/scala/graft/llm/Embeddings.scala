@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * re-allocating the arrays dominated their runtime.
   */
 object Embeddings {
-  def withNorm(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(spark)
+  def withNorm(spark: SparkSession, dir: String): DataFrame =
     graft.FrameCache.get(spark, dir, "embeddings", "Embeddings.withNorm")(
       t(spark, dir, "embeddings")
         .select(col("vec_id"), col("label"),
@@ -25,7 +24,6 @@ object Embeddings {
         // smaller and evict cleanly under the budget instead of pinning
         // the deserialized object graph against execution memory
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-  }
 
   /** [[withNorm]] restricted to vectors that HAVE a direction
     * (nrm > 0) — the ingestion contract of every cosine consumer

@@ -267,7 +267,6 @@ object Sampling {
     * corpus size.
     */
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     val tf = t(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         explode(expr("array_counts(split(text, ' '))")).as(Seq("tok", "tf")))

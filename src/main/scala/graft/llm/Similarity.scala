@@ -568,7 +568,6 @@ object Similarity {
   def ivfCentroidMargin(spark: SparkSession, dir: String): DataFrame = {
     val c = Clustering.fittedCentroids(spark, dir)
       .select("cid", "cv", "cnrm")
-    graft.functions.VecDot.register(spark)
     broadcast(c.as("a"))
       .join(c.as("b"), col("a.cid") < col("b.cid"))
       .select(col("a.cid").as("c1"), col("b.cid").as("c2"),

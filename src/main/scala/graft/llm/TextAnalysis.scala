@@ -202,10 +202,8 @@ object TextAnalysis {
     * frame. Null text degrades to one zero-length token, same as the
     * oracle's split semantics.
     */
-  def tokenLenProfile(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
+  def tokenLenProfile(spark: SparkSession, dir: String): DataFrame =
     tokenLenRollup(t(spark, dir, "documents"))
-  }
 
   /** The in-row length fold + (source, tok_len) rollup — ONE spelling
     * shared by [[tokenLenProfile]] and the streaming monitor
@@ -315,7 +313,6 @@ object TextAnalysis {
     * only case where a tiebreak could matter) negligible.
     */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     // tPar: gram hashing is per-row-expensive and this is a direct scan
     // (no shared cache) — measured 0.77x with the parallelized scan.
     graft.Tables.tPar(spark, dir, "documents", "doc_id")
@@ -419,7 +416,6 @@ object TextAnalysis {
     * hash-verified). Top-10 terms per document by weight.
     */
   def tfidf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     val docs = t(spark, dir, "documents")
     // In-row TF (array_counts combiner): one (doc, term, tf) row per
     // DISTINCT term per doc, no per-occurrence explode and no (doc, term)
@@ -446,7 +442,6 @@ object TextAnalysis {
     // (gram_counts native expression) instead of one per occurrence —
     // 3-4x fewer generator rows, and the rollup SUMs partial counts
     // (NativeExprSpec pins count-equivalence to the explode form).
-    graft.functions.TextHashes.register(spark)
     t(spark, dir, "documents")
       .filter(length(col("text")) >= 3)
       .select(explode(expr("gram_counts(text, 3)")).as(Seq("g", "c")))
@@ -465,7 +460,6 @@ object TextAnalysis {
     * one-aggregation shape.
     */
   def bpePairCounts(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     t(spark, dir, "documents")
       .filter(length(col("text")) >= 2)
       .select(explode(expr("gram_counts(text, 2)")).as(Seq("pair", "c")))
@@ -952,7 +946,6 @@ object TextAnalysis {
     * scan speed at 100 TB.
     */
   def repetitionProfile(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     def gm(n: Int) = expr(
       s"""array_counts(transform(sequence(1, size(toks) - ${n - 1}),
          |  i -> concat_ws(' ', slice(toks, i, $n))))""".stripMargin)
@@ -991,7 +984,6 @@ object TextAnalysis {
     * per-source frames are |sources| rows and broadcast.
     */
   def sourceUniqueGrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     // Deliberately NOT checkpointed: the deduped (source, h) frame is
     // DATA-sized, so materializing it for its two consumers costs as
     // much as the rescans it would save (measured: +46% at sf0.1 and
@@ -1042,7 +1034,6 @@ object TextAnalysis {
     * never a global sort.
     */
   def collocations(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     val toks = t(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
     // The unigram frame has three consumers, each re-deriving it from
@@ -1264,7 +1255,6 @@ object TextAnalysis {
       buildGramLikelihood(spark, dir).localCheckpoint())
 
   private def buildGramLikelihood(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     val tf = t(spark, dir, "documents")
       .select(col("doc_id"),
         explode(expr("array_counts(split(text, ' '))")).as(Seq("tok", "tf")))
@@ -1387,7 +1377,6 @@ object TextAnalysis {
     * explode, no shuffle; streams at scan speed at 100 TB.
     */
   def lexicalDiversity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     t(spark, dir, "documents")
       .withColumn("m", expr("array_counts(split(text, ' '))"))
       .select(col("doc_id"),
@@ -1417,7 +1406,6 @@ object TextAnalysis {
     * text; at 100 TB the shuffle is ~2% of corpus bytes.
     */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     // tPar: per-row gram hashing + explode dominates; direct scan, no
     // shared cache — measured 0.61x with the parallelized scan.
     graft.Tables.tPar(spark, dir, "documents", "doc_id")
@@ -1448,7 +1436,6 @@ object TextAnalysis {
     * by the map-side-combined doc rollup.
     */
   def bigramLikelihood(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashes.register(spark)
     t(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 2)

@@ -300,7 +300,6 @@ object Streams {
     */
   def ivfAppendStream(spark: SparkSession, dir: String,
       stream: DataFrame): DataFrame = {
-    graft.functions.VecDot.register(spark)
     val cl = graft.llm.Clustering.fittedCentroids(spark, dir)
       .agg(collect_list(struct(col("cid"), col("cv"), col("cnrm")))
         .as("cl"))
@@ -405,7 +404,6 @@ object Streams {
     */
   def annServeStream(spark: SparkSession, dir: String,
       stream: DataFrame): DataFrame = {
-    graft.functions.VecDot.register(spark)
     val cl = graft.llm.Clustering.fittedCentroids(spark, dir)
       .agg(collect_list(struct(col("cid"), col("cv"), col("cnrm")))
         .as("cl"))
@@ -444,7 +442,6 @@ object Streams {
     * card under in-order AND shuffled multi-batch delivery.
     */
   def corpusCardStream(stream: DataFrame): DataFrame = {
-    graft.functions.TextHashes.register(stream.sparkSession)
     stream
       .withColumn("m", expr("array_counts(split(text, ' '))"))
       .withColumn("n_words",
@@ -480,7 +477,6 @@ object Streams {
     * dependent, the set is not.
     */
   def gramNoveltyStream(stream: DataFrame): DataFrame = {
-    graft.functions.TextHashes.register(stream.sparkSession)
     stream
       .filter(length(col("text")) >= 8)
       .select(col("doc_id").cast("long").as("doc_id"),
@@ -601,10 +597,8 @@ object Streams {
     * counters are delivery-order invariant (StreamingSpec pins == batch
     * under in-order AND shuffled delivery).
     */
-  def tokenLenStream(stream: DataFrame): DataFrame = {
-    graft.functions.TextHashes.register(stream.sparkSession)
+  def tokenLenStream(stream: DataFrame): DataFrame =
     graft.llm.TextAnalysis.tokenLenRollup(stream)
-  }
 
   /** Continuous HLL register maintenance — the streaming half of
     * [[graft.analytics.Analytics.hllDistinctEval]], via the SAME shared

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.{MinHashSig, TextHashes, VecDot}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * on real data so a refactor can't silently break oracle parity.
   */
 class NativeExprSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.build("local[4]", "4")
-    MinHashSig.register(s)
-    VecDot.register(s)
-    TextHashes.register(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.build("local[4]", "4")
   val dir = "/root/testdata/sf0.001"
 
   private def mismatches(leftRight: org.apache.spark.sql.DataFrame): Long =
@@ -100,12 +93,13 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("every native function is SQL-callable via the extensions path") {
-    // GraftSession installs GraftExtensions only — no TextHashes.register
-    // call — so this pins that the extensions route exposes the FULL
-    // canonical list (it had drifted: intersect_sorted / gram_counts /
-    // array_counts were missing from it).
-    graft.functions.NativeFunctions.all.foreach { case (name, _, _) =>
-      val fn = spark.sessionState.catalog
+    // GraftExtensions is the only registration path, so this pins that it
+    // exposes the FULL canonical list (it had drifted: intersect_sorted /
+    // gram_counts / array_counts were missing from it) — in the built
+    // session and in a newSession() derived from it.
+    for (s <- Seq(spark, spark.newSession());
+         (name, _, _) <- graft.functions.NativeFunctions.all) {
+      val fn = s.sessionState.catalog
         .lookupFunctionInfo(org.apache.spark.sql.catalyst
           .FunctionIdentifier(name))
       assert(fn.getName == name, s"$name not resolvable via extensions")

@@ -642,7 +642,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("source_unique_grams: universe accounting closes exactly") {
-    graft.functions.TextHashes.register(spark)
     val s = llm.TextAnalysis.sourceUniqueGrams(spark, dir).cache()
     val docs = Tables.t(spark, dir, "documents")
     assert(s.count() == docs.filter(length(col("text")) >= 8)
@@ -1819,7 +1818,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(first == 1.0)
     // every gram's first occurrence is credited exactly once: the novel
     // mass across docs equals the corpus-wide distinct gram-hash count
-    graft.functions.TextHashes.register(spark)
     val distinctGrams = Tables.t(spark, dir, "documents")
       .filter(length(col("text")) >= 8)
       .select(explode(expr("gram_hashes(text, 8, 0)")).as("h"))
@@ -2559,7 +2557,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("quality_length_matrix: buckets in grid, rows close, mass conserved") {
-    graft.functions.TextHashes.register(spark)
     val m = llm.TextAnalysis.qualityLengthMatrix(spark, dir).cache()
     assert(m.filter(col("q_bucket") < 0L || col("q_bucket") > 9L ||
       col("len_bucket") < 0L || col("len_bucket") > 9L).count() == 0)
@@ -2597,7 +2594,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("likelihood_quartiles: ordered picks bracket the scored population") {
-    graft.functions.TextHashes.register(spark)
     val lq = llm.TextAnalysis.likelihoodQuartiles(spark, dir).cache()
     val scored = llm.TextAnalysis.gramLikelihood(spark, dir)
       .join(Tables.t(spark, dir, "documents").select("doc_id", "source"),
@@ -2716,7 +2712,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("token_len_profile: token mass equals the whitespace tokenizer") {
-    graft.functions.TextHashes.register(spark)
     val tp = llm.TextAnalysis.tokenLenProfile(spark, dir).cache()
     val nToks = Tables.t(spark, dir, "documents")
       .select(size(split(coalesce(col("text"), lit("")), " "))

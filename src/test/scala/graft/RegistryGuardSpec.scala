@@ -35,6 +35,17 @@ class RegistryGuardSpec extends AnyFunSuite {
         over.mkString(", "))
   }
 
+  test("query-name filter: blank is no filter, an unknown name fails") {
+    assert(SparkEntry.queryFilter(None).isEmpty)
+    assert(SparkEntry.queryFilter(Some("")).isEmpty)
+    assert(SparkEntry.queryFilter(Some(" , ")).isEmpty)
+    assert(SparkEntry.queryFilter(Some("q1_agg, event_paths")) ==
+      Some(Set("q1_agg", "event_paths")))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.queryFilter(Some("q1_agg,q1_agx")))
+    assert(e.getMessage.contains("q1_agx"))
+  }
+
   test("registry closures pin the wide fan-out to the wide-state queries") {
     val queries = SparkEntry.queries
     // A renamed query would silently drop out of the wide set.

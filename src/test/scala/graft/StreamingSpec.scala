@@ -731,7 +731,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("live token-length histogram == batch token_len_profile, any order") {
-    graft.functions.TextHashes.register(spark)
     val docs = Tables.t(spark, dir, "documents")
     val want = llm.TextAnalysis.tokenLenProfile(spark, dir)
     def run(src: org.apache.spark.sql.DataFrame, name: String) = {
@@ -793,7 +792,6 @@ class StreamingSpec extends AnyFunSuite {
     // The discovered gram SET (and so its size == the batch novel mass)
     // is delivery-order invariant; WHICH doc carries each first-arrival
     // emission is not, so the pin compares `h` sets only.
-    graft.functions.TextHashes.register(spark)
     val docs = Tables.t(spark, dir, "documents")
     val want = docs.filter(length(col("text")) >= 8)
       .select(explode(expr("gram_hashes(text, 8, 0)")).as("h"))

@@ -4,10 +4,14 @@
 Runs one workload once per seed in each of two checkouts. The parent runs
 first on odd pairs and the change first on even ones, so a drift of the host
 during the session falls on both sides alike. Each run's last stdout line
-(perfbench's JSON result) is appended to a log, one JSON object per line.
-Then, for each end-to-end metric of BENCHMARK.json, it prints the median and
-quartiles of each side and the number of pairs the change won, and flags a
-median that moved by more than the parent's quartile spread.
+(perfbench's JSON result) is appended to a log, one JSON object per line,
+with the path of the run's record and its host CPU steal, both taken from
+perfbench's `[perfbench] record ...` stderr line. Then, for each end-to-end
+metric of BENCHMARK.json, it prints the median and quartiles of each side
+and the number of pairs the change won, and flags a median that moved by
+more than the parent's quartile spread. It also prints each side's median
+steal and, where the records hold per-query `cold_ms`/`warm_ms`
+(registry_queries), each query's cold and warm median per side.
 
     python3 tools/ab_pairs.py PARENT_DIR CHANGE_DIR --workload log_store \\
         --seeds 1-10 --log ab_log_store.jsonl
@@ -20,6 +24,7 @@ BENCHMARK.json. The script only reads perfbench's output.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -42,15 +47,21 @@ def quartiles(values):
     return q1, statistics.median(values), q3
 
 
+RECORD_LINE = re.compile(r"\[perfbench\] record (.+?): .*?steal ([0-9.]+) s")
+
+
 def run_once(checkout, spec, workload, seed, trace):
     cmd = spec["command"] + ["--workload", workload, "--seed", str(seed),
                              "--seconds", str(spec["run_seconds"]), "--trace", str(trace)]
     t0 = time.time()
     proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
-                          stderr=subprocess.DEVNULL, text=True)
+                          stderr=subprocess.PIPE, text=True)
     lines = proc.stdout.strip().splitlines()
+    rec = RECORD_LINE.search(proc.stderr)
     return {"wall_s": round(time.time() - t0, 1), "exit": proc.returncode,
-            "line": lines[-1] if lines else ""}
+            "line": lines[-1] if lines else "",
+            "record": os.path.join(checkout, rec.group(1)) if rec else None,
+            "steal_s": float(rec.group(2)) if rec else None}
 
 
 def run_pairs(a, spec):
@@ -66,6 +77,45 @@ def run_pairs(a, spec):
                 log.flush()
                 print(f"pair {i} seed {seed} {side}: exit {r['exit']}, {r['wall_s']} s",
                       file=sys.stderr)
+
+
+def median_or_none(values):
+    return statistics.median(values) if values else None
+
+
+def per_query_ms(run):
+    """{query: (cold ms, warm ms)} from a run's record, warm being the
+    median of its warm calls; empty when the record has no such fields."""
+    path = run.get("record")
+    if not path or not os.path.exists(path):
+        return {}
+    with open(path) as fh:
+        rec = json.load(fh)
+    cold, warm = rec.get("cold_ms") or {}, rec.get("warm_ms") or {}
+    return {q: (cold[q], statistics.median(warm[q]) if warm.get(q) else None)
+            for q in cold}
+
+
+def print_side_detail(runs, workload, seeds):
+    fmt = lambda v: "-" if v is None else f"{v:.4g}"
+    side_runs = {side: [r for r in (runs.get((workload, s, side)) for s in seeds) if r]
+                 for side in ("parent", "change")}
+    steal = {side: median_or_none([r["steal_s"] for r in rs if r.get("steal_s") is not None])
+             for side, rs in side_runs.items()}
+    print(f"median steal s: parent {fmt(steal['parent'])}, change {fmt(steal['change'])}")
+    per_query = {side: [per_query_ms(r) for r in rs] for side, rs in side_runs.items()}
+    names = sorted({q for qs in per_query.values() for ms in qs for q in ms})
+    if not names:
+        return
+    print(f"{'query (median ms)':<24} {'parent cold':>12} {'change cold':>12} "
+          f"{'parent warm':>12} {'change warm':>12}")
+    for q in names:
+        cells = []
+        for i in (0, 1):
+            for side in ("parent", "change"):
+                vals = [ms[q][i] for ms in per_query[side] if q in ms and ms[q][i] is not None]
+                cells.append(fmt(median_or_none(vals)))
+        print(f"{q:<24} " + " ".join(f"{c:>12}" for c in cells))
 
 
 def summarize(log_path, spec):
@@ -109,6 +159,7 @@ def summarize(log_path, spec):
                 note = "WORSE THAN BOUND"
             fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
             print(f"{name:<16} {fmt(pq):>30} {fmt(cq):>30} {won:>3}/{len(pairs):<2}  {note}")
+        print_side_detail(runs, workload, seeds)
 
 
 def main():

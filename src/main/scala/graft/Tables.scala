@@ -169,18 +169,25 @@ object Tables {
   def fingerprint(spark: SparkSession, dir: String, name: String): String =
     fingerprintPath(spark, s"$dir/$name.parquet")
 
+  /** The one rule for "local": a path with no scheme or a `file:` one is
+    * a local file, handled through java.nio; any other scheme (hdfs://,
+    * s3a://) is None and keeps the Hadoop FileSystem API.
+    */
+  private[graft] def localPath(raw: String): Option[java.nio.file.Path] = {
+    val uri = new org.apache.hadoop.fs.Path(raw).toUri
+    if (uri.getScheme == null || uri.getScheme == "file")
+      Some(java.nio.file.Paths.get(uri.getPath))
+    else None
+  }
+
   private[graft] def fingerprintPath(spark: SparkSession, raw: String)
       : String = {
     // Local-path fast path: Hadoop's LocalFileSystem stats each file
     // through a shim (measured ~7 ms per fingerprint at sf0.1); a plain
     // NIO walk of the same directory is ~0.1 ms. Every frame-cache access
-    // and every reader-plan lookup pays this, so it is hot. Non-local
-    // schemes (hdfs://, s3a://) keep the Hadoop path.
-    val scheme = new java.net.URI(raw).getScheme
-    val entries: Seq[String] =
-      if (scheme == null || scheme == "file") {
-        val p = java.nio.file.Paths.get(
-          if (scheme == null) raw else new java.net.URI(raw).getPath)
+    // and every reader-plan lookup pays this, so it is hot.
+    val entries: Seq[String] = localPath(raw) match {
+      case Some(p) =>
         if (!java.nio.file.Files.exists(p)) Seq(s"absent:file:$p")
         else {
           val buf = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -197,7 +204,7 @@ object Tables {
           } finally stream.close()
           buf.sorted.toSeq
         }
-      } else {
+      case None =>
         val p = new org.apache.hadoop.fs.Path(raw)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(p)) Seq(s"absent:$p")
@@ -210,7 +217,7 @@ object Tables {
           }
           buf.sorted.toSeq
         }
-      }
+    }
     java.util.UUID.nameUUIDFromBytes(
       entries.mkString("\n").getBytes("UTF-8")).toString
   }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * the storage-engine analog of the reference's entry formats
   * (/root/reference/kafka-impl/.../format/EntryFormatter.java) and ledger
   * layout (storage/PartitionLog.java): one directory per (topic, part),
-  * segment files of length-prefixed record batches (magic, count, base
-  * offset, max timestamp, max offset, then per record offset-delta /
+  * segment files of length-prefixed record batches (magic, CRC32C, count,
+  * base offset, max timestamp, max offset, then per record offset-delta /
   * timestamp / event id / framed key / framed value).
   *
   * The layout IS the index: topic/part predicates prune whole directories
@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * and max offset) to skip it on an offset bound without decoding
   * records — exactly how the reference's fetch path seeks by offset.
   * [[GlogSource]] exposes it to Spark as a DataSource V2 table.
+  *
+  * Integrity lives in the format: every batch a reader decodes is checked
+  * against its header's CRC32C (utils/KopLogValidator.java's record-batch
+  * CRC), whatever filesystem holds the segment. Local stores (no scheme or
+  * `file:`, the rule of [[graft.Tables.localPath]]) are written through
+  * java.nio; other schemes go through the Hadoop FileSystem API.
   */
 object Glog {
 
@@ -38,12 +44,20 @@ object Glog {
     * written dense: their max offset is base + count - 1.
     */
   val MagicO: Byte = 5
+  /** v6 header adds a CRC32C right after the magic, over the header fields
+    * that follow it and the body, as Kafka's record-batch CRC covers its
+    * batch from the attributes on. It replaces the `.crc` files Hadoop's
+    * checksummed local filesystem wrote beside v3-v5 segments, which that
+    * filesystem's reader still verifies. The batch writer's format.
+    */
+  val MagicC: Byte = 6
   val MaxBatch = 100
 
   private def headerLen(magic: Byte): Int = magic match {
     case Magic => 13
     case MagicT => 21
     case MagicO => 29
+    case MagicC => 33
     case m => throw new IllegalArgumentException(s"bad magic $m")
   }
 
@@ -73,7 +87,8 @@ object Glog {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     val first = recs.head.offs
-    out.writeByte(MagicO)
+    out.writeByte(MagicC)
+    out.writeInt(0) // the CRC, set below
     out.writeInt(recs.size)
     out.writeLong(first)
     out.writeLong(recs.iterator.map(_.tms).max)
@@ -94,32 +109,66 @@ object Glog {
       frame(r.v)
     }
     out.flush()
-    bos.toByteArray
+    val batch = bos.toByteArray
+    val crc = new java.util.zip.CRC32C()
+    crc.update(batch, 5, batch.length - 5)
+    java.nio.ByteBuffer.wrap(batch).putInt(1, crc.getValue.toInt)
+    batch
   }
 
   /** One batch header: the body length after the header, the record
     * count, the base (= lowest) offset, the max timestamp (Long.MaxValue
-    * for v3, which has none) and the max offset. Only a v5 header carries
-    * the max offset; for v3/v4 it is Long.MaxValue, unknown, because a
-    * store compacted before v5 wrote gapped v4 batches whose offsets run
-    * past base + count.
+    * for v3, which has none), the max offset and the CRC (0 before v6).
+    * Only v5 and later headers carry the max offset; for v3/v4 it is
+    * Long.MaxValue, unknown, because a store compacted before v5 wrote
+    * gapped v4 batches whose offsets run past base + count.
     */
   private final case class Header(magic: Byte, bodyLen: Int, n: Int,
-      base: Long, maxTms: Long, maxOffs: Long)
+      base: Long, maxTms: Long, maxOffs: Long, crc: Int)
 
-  /** The next batch header off the stream, or None at its end. */
+  /** The next batch header off the stream, or None at its end. A stream
+    * that ends inside a length prefix is truncated, not ended.
+    */
   private def nextHeader(in: DataInputStream): Option[Header] = {
-    val batchLen =
-      try in.readInt()
-      catch { case _: EOFException => return None }
+    val b0 = in.read()
+    if (b0 < 0) return None
+    val batchLen = b0 << 24 | in.readUnsignedByte() << 16 |
+      in.readUnsignedByte() << 8 | in.readUnsignedByte()
     val magic = in.readByte()
     val bodyLen = batchLen - headerLen(magic)
+    val crc = if (magic >= MagicC) in.readInt() else 0
     val n = in.readInt()
     val base = in.readLong()
     val maxTms = if (magic == Magic) Long.MaxValue else in.readLong()
-    val maxOffs = if (magic == MagicO) in.readLong() else Long.MaxValue
-    Some(Header(magic, bodyLen, n, base, maxTms, maxOffs))
+    val maxOffs = if (magic >= MagicO) in.readLong() else Long.MaxValue
+    Some(Header(magic, bodyLen, n, base, maxTms, maxOffs, crc))
   }
+
+  /** A batch body off the stream. A length past the stream's end (a
+    * truncated segment or a corrupt length prefix) fails; one over 1 MiB
+    * is read in chunks, so a corrupt prefix never allocates its claim.
+    */
+  private def readBody(in: DataInputStream, n: Int, seg: String): Array[Byte] = {
+    if (n < 0) throw new java.io.IOException(s"bad glog batch length in $seg")
+    val body =
+      if (n <= (1 << 20)) { val b = new Array[Byte](n); in.readFully(b); b }
+      else in.readNBytes(n)
+    if (body.length < n) throw new EOFException(
+      s"glog batch truncated in $seg: ${body.length} of $n body bytes")
+    body
+  }
+
+  /** Fail unless a v6 batch's body and header agree with its CRC32C. */
+  private def checkCrc(h: Header, body: Array[Byte], seg: String): Unit =
+    if (h.magic >= MagicC) {
+      val crc = new java.util.zip.CRC32C()
+      crc.update(java.nio.ByteBuffer.allocate(28).putInt(h.n).putLong(h.base)
+        .putLong(h.maxTms).putLong(h.maxOffs).array())
+      crc.update(body)
+      if (crc.getValue.toInt != h.crc) throw new java.io.IOException(
+        f"glog batch CRC32C mismatch in $seg at base offset ${h.base}: " +
+          f"stored ${h.crc}%08x, computed ${crc.getValue.toInt}%08x")
+    }
 
   /** Iterate a segment stream's records; batches entirely below `fromOffs`
     * or at/after `untilOffs` are skipped from their headers without
@@ -135,11 +184,16 @@ object Glog {
     * materializing strings that the scan would immediately drop — the
     * payload is the dominant byte volume, so a metadata-only query decodes
     * ~0% of the store (GlogSpec pins payloadBytesDecoded == 0 for it).
+    *
+    * Every decoded v6 batch is checked against its CRC32C first; a
+    * mismatch fails the read with an IOException naming `seg`. Skipped
+    * batches are not checked: a skip reads the header only.
     */
   def readSegment(in: DataInputStream, topic: String, part: Long,
       fromOffs: Long, untilOffs: Long = Long.MaxValue,
       minTms: Long = Long.MinValue,
-      needK: Boolean = true, needV: Boolean = true): Iterator[Rec] =
+      needK: Boolean = true, needV: Boolean = true,
+      seg: String = "glog segment"): Iterator[Rec] =
     new Iterator[Rec] {
     private var cur: Iterator[Rec] = Iterator.empty
     private def advance(): Unit = {
@@ -156,8 +210,8 @@ object Glog {
           skipFully(in, h.bodyLen)
         } else {
           batchesRead.incrementAndGet()
-          val body = new Array[Byte](h.bodyLen)
-          in.readFully(body)
+          val body = readBody(in, h.bodyLen, seg)
+          checkCrc(h, body, seg)
           val b = new DataInputStream(new java.io.ByteArrayInputStream(body))
           def str(need: Boolean): String = {
             val len = b.readInt()
@@ -177,9 +231,9 @@ object Glog {
             val vv = str(needV)
             Rec(topic, part, h.base + delta, eid, tms, kk, vv)
           }
-          // The skip above trusts a v5 header's max offset; a batch whose
+          // The skip above trusts a v5+ header's max offset; a batch whose
           // records disagree with it is corrupt.
-          require(h.magic != MagicO || h.n == 0 ||
+          require(h.magic < MagicO || h.n == 0 ||
             recs.iterator.map(_.offs).max == h.maxOffs, "bad batch header")
           cur = recs.iterator.filter(r => r.offs >= fromOffs && r.offs < untilOffs)
         }
@@ -206,7 +260,7 @@ object Glog {
         while (h.isDefined) {
           val hd = h.get
           val maxOffs =
-            if (hd.magic == MagicO) { skipFully(in, hd.bodyLen); hd.maxOffs }
+            if (hd.magic >= MagicO) { skipFully(in, hd.bodyLen); hd.maxOffs }
             else {
               var mx = hd.base - 1
               for (_ <- 0 until hd.n) {
@@ -258,9 +312,9 @@ object Glog {
       s"glog topic name not storable as a directory: '$topic'")
 
   /** Executor-side segment writer: one shuffle onto (topic, part),
-    * offset-sorted, then one [[writeSegment]] per (topic, part) — segments
-    * written through the Hadoop FileSystem API (works on any FS; no
-    * driver involvement).
+    * offset-sorted, then one [[writeSegment]] per (topic, part), with no
+    * driver involvement. A local store is written through java.nio, any
+    * other scheme through the Hadoop FileSystem API.
     */
   def writeSegments(ds: org.apache.spark.sql.Dataset[Rec], outPath: String,
       segName: String): Unit = {
@@ -285,16 +339,22 @@ object Glog {
 
   /** Write segment `segName` of one (topic, part) of the store at
     * `outPath` from `recs`, that partition's records in ascending offset
-    * order, as [[MaxBatch]]-record batches: one file per commit, whose
-    * batch headers are the only index. Writes nothing when `recs` is
-    * empty. This is the store's one commit path; [[writeSegments]] and
-    * [[GlogOps.compactStore]] both end here.
+    * order, as [[MaxBatch]]-record v6 batches: one file per commit, whose
+    * batch headers are the only index and carry its checksums. Writes
+    * nothing when `recs` is empty. This is the store's one commit path;
+    * [[writeSegments]] and [[GlogOps.compactStore]] both end here.
     *
     * Commit protocol: the segment is written to a task-attempt-unique
     * hidden temp file and renamed into place on success, so a speculative
     * or zombie duplicate attempt can never interleave bytes with the
     * winner — the same staging+commit discipline Spark's file sources use.
     * Readers only see `*.glog`, never the in-flight `.*.tmp-*` files.
+    *
+    * A local store ([[graft.Tables.localPath]]) is written with
+    * `Files.newOutputStream` and published with `Files.move(ATOMIC_MOVE)`:
+    * no process is forked (Hadoop's local filesystem runs `chmod` per
+    * create without its native library) and no `.crc` file is written.
+    * Any other scheme goes through `FileSystem.create` and `rename`.
     */
   def writeSegment(conf: org.apache.hadoop.conf.Configuration, outPath: String,
       segName: String, topic: String, part: Long, recs: Iterator[Rec]): Unit = {
@@ -303,21 +363,20 @@ object Glog {
     val attempt = Option(org.apache.spark.TaskContext.get())
       .map(tc => s"${tc.stageId()}-${tc.taskAttemptId()}")
       .getOrElse("driver")
-    val dir = partitionDir(outPath, topic, part)
-    val segPath = new org.apache.hadoop.fs.Path(dir, s"$segName.glog")
-    val tmpPath = new org.apache.hadoop.fs.Path(dir,
-      s".$segName.glog.tmp-$attempt")
-    val pfs = segPath.getFileSystem(conf)
-    val out = new DataOutputStream(pfs.create(tmpPath, true))
-    try {
-      while (recs.hasNext) {
-        val group = scala.collection.mutable.ArrayBuffer[Rec]()
-        while (recs.hasNext && group.size < MaxBatch) group += recs.next()
-        val bytes = encodeBatch(group.toSeq)
-        out.writeInt(bytes.length)
-        out.write(bytes)
-      }
-    } finally out.close()
+    val seg = s"$segName.glog"
+    val tmp = s".$seg.tmp-$attempt"
+    def writeBatches(os: java.io.OutputStream): Unit = {
+      val out = new DataOutputStream(os)
+      try {
+        while (recs.hasNext) {
+          val group = scala.collection.mutable.ArrayBuffer[Rec]()
+          while (recs.hasNext && group.size < MaxBatch) group += recs.next()
+          val bytes = encodeBatch(group.toSeq)
+          out.writeInt(bytes.length)
+          out.write(bytes)
+        }
+      } finally out.close()
+    }
     // Publish with a rename-ONLY commit: a delete-then-rename pair
     // would open a window in which a concurrent reader (listEnds in
     // the streaming source's latestOffset, the sink's offset
@@ -327,10 +386,33 @@ object Glog {
     // rename that loses because the destination exists is a
     // concurrent duplicate attempt with identical bytes — drop
     // ours and let theirs stand.
-    if (!pfs.rename(tmpPath, segPath)) {
-      pfs.delete(tmpPath, false)
-      require(pfs.exists(segPath),
-        s"glog segment commit failed for $segPath")
+    graft.Tables.localPath(outPath) match {
+      case Some(root) =>
+        import java.nio.file.{Files, StandardCopyOption}
+        val dir = root.resolve(s"topic=$topic").resolve(s"part=$part")
+        Files.createDirectories(dir)
+        writeBatches(new java.io.BufferedOutputStream(
+          Files.newOutputStream(dir.resolve(tmp)), 1 << 16))
+        // The `.crc` an older writer left beside a segment of this name
+        // would fail the Hadoop reader's check of the new bytes.
+        Files.deleteIfExists(dir.resolve(s".$seg.crc"))
+        try Files.move(dir.resolve(tmp), dir.resolve(seg), StandardCopyOption.ATOMIC_MOVE)
+        catch {
+          case e: java.io.IOException =>
+            Files.deleteIfExists(dir.resolve(tmp))
+            if (!Files.exists(dir.resolve(seg))) throw new java.io.IOException(
+              s"glog segment commit failed for ${dir.resolve(seg)}", e)
+        }
+      case None =>
+        val dir = partitionDir(outPath, topic, part)
+        val (segPath, tmpPath) =
+          (new org.apache.hadoop.fs.Path(dir, seg), new org.apache.hadoop.fs.Path(dir, tmp))
+        val pfs = segPath.getFileSystem(conf)
+        writeBatches(pfs.create(tmpPath, true))
+        if (!pfs.rename(tmpPath, segPath)) {
+          pfs.delete(tmpPath, false)
+          require(pfs.exists(segPath), s"glog segment commit failed for $segPath")
+        }
     }
   }
 

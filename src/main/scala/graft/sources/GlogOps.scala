@@ -18,12 +18,12 @@ object GlogOps {
   /** The log view of `dir` read back from its glog copy. The copy is a
     * [[graft.Tables.store]] keyed by the dataset and the `events` content
     * fingerprint, under a name that carries the batch format
-    * ([[Glog.MagicO]]): rewritten events, another dataset or a new batch
+    * ([[Glog.MagicC]]): rewritten events, another dataset or a new batch
     * header each read their own build, and a copy without its completion
     * marker is rebuilt, never read.
     */
   def glogRead(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.Tables.store(spark, s"graft_glog_v${Glog.MagicO}", dir,
+    val root = graft.Tables.store(spark, s"graft_glog_v${Glog.MagicC}", dir,
       "events")(r => Glog.materialize(spark, dir, r.toString))
     spark.read.format("glog").load(root.toString)
       .select("topic", "part", "offs", "event_id", "tms", "k", "v")
@@ -31,7 +31,7 @@ object GlogOps {
 
   /** Time-bounded fetch through the store: the same DSv2 read with a
     * pushed `tms` lower bound, so each batch header's max timestamp (v4
-    * and later; v5 today) skips whole batches payload-free (the
+    * and later; v6 today) skips whole batches payload-free (the
     * ListOffsets-by-time -> fetch path end to end over the engine's own
     * storage; Kafka's .timeindex seek). Hash-exact against DuckDB
     * filtering the log view the store was built from.
@@ -103,7 +103,8 @@ object GlogOps {
       try {
         var lo = Long.MaxValue
         var hi = Long.MinValue
-        Glog.readSegment(in, topic, part, Long.MinValue, needV = false).foreach { r =>
+        Glog.readSegment(in, topic, part, Long.MinValue, needV = false,
+            seg = st.getPath.toString).foreach { r =>
           if (r.offs <= hi) throw new IllegalStateException(
             s"glog partition $dir is not append-only: offset ${r.offs} " +
               s"follows $hi in ${st.getPath.getName}")
@@ -131,7 +132,7 @@ object GlogOps {
       val survivors = ranges.iterator.flatMap { case (seg, _, _) =>
         val in = open(seg)
         opened += in
-        Glog.readSegment(in, topic, part, Long.MinValue)
+        Glog.readSegment(in, topic, part, Long.MinValue, seg = seg.toString)
           .filter(r => latest.get(r.k).offs == r.offs) ++ { in.close(); Iterator.empty }
       }
       Glog.writeSegment(conf, outPath, "segment-0", topic, part, survivors)

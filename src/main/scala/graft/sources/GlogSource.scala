@@ -22,7 +22,7 @@ import org.apache.spark.util.SerializableConfiguration
   * partition is: planning lists the directories that pushed topic/part
   * equalities leave, without opening a file, and plans one input
   * partition per directory holding all of its segment files. Pushed
-  * `offs` bounds and a `tms` lower bound travel to the reader, whose v5
+  * `offs` bounds and a `tms` lower bound travel to the reader, whose v5+
   * batch headers skip every batch outside them without decoding it — the
   * reference's fetch path (a bounded range scan of one topic-partition
   * from an offset; MessageFetchContext.java) expressed as a Spark source.
@@ -294,7 +294,7 @@ class GlogReaderFactory(required: StructType, conf: SerializableConfiguration)
         in = new DataInputStream(fp.getFileSystem(conf.value).open(fp))
         Glog.readSegment(in, p.topic, p.part, p.fromOffs, p.untilOffs, p.minTms,
           needK = required.fieldNames.contains("k"),
-          needV = required.fieldNames.contains("v"))
+          needV = required.fieldNames.contains("v"), seg = f)
       }
       // Column pruning: precompute the projection from field name to the
       // record accessor once per partition.

@@ -150,10 +150,10 @@ class GlogSpec extends AnyFunSuite {
         s"k$i", s"v$i"))
     Glog.writeSegments(spark.createDataset(recs(0L, 200L)), p, "segment-0")
     Glog.writeSegments(spark.createDataset(recs(200L, 400L)), p, "segment-1")
-    // one file per commit: the segments and their checksums, nothing else
+    // one file per commit: the segments, no `.crc` and no `.tmp-` file
     assert(java.nio.file.Files.list(java.nio.file.Paths.get(p, "topic=t", "part=0"))
       .toArray.map(_.toString.split('/').last).sorted.toSeq == Seq(
-        ".segment-0.glog.crc", ".segment-1.glog.crc", "segment-0.glog", "segment-1.glog"))
+        "segment-0.glog", "segment-1.glog"))
     val df = spark.read.format("glog").load(p)
     def inputPartitions(d: org.apache.spark.sql.DataFrame) =
       d.queryExecution.executedPlan.collectFirst {
@@ -499,6 +499,95 @@ class GlogSpec extends AnyFunSuite {
       Map("t/0" -> 200L))
   }
 
+  /** `seg` with the first occurrence of `find` changed to `to`, both the
+    * same length, so every length prefix stays valid.
+    */
+  private def rewrite(seg: java.nio.file.Path, find: String, to: String): Unit = {
+    val b = java.nio.file.Files.readAllBytes(seg)
+    val (f, t) = (find.getBytes("UTF-8"), to.getBytes("UTF-8"))
+    val at = b.indices.find(i => b.slice(i, i + f.length).sameElements(f)).get
+    System.arraycopy(t, 0, b, at, t.length)
+    java.nio.file.Files.write(seg, b)
+  }
+
+  test("a v6 batch whose bytes change fails the read, naming its segment") {
+    def rec(offs: Long) = Glog.Rec("t", 0L, offs, offs, 1700000000000L + offs,
+      s"k$offs", s"value-$offs")
+    val p = java.nio.file.Files.createTempDirectory("graft_glog_crc").toString
+    segment(p, "segment-0", (0L until 250L).map(rec))
+    assert(readAll(p).size == 250)
+    // one byte of one value string in the second batch; the framing holds
+    rewrite(java.nio.file.Paths.get(p, "topic=t", "part=0", "segment-0.glog"),
+      "value-150", "value-15X")
+    val e = intercept[org.apache.spark.SparkException](readAll(p))
+    assert(e.getMessage.contains("CRC32C mismatch") &&
+      e.getMessage.contains("topic=t/part=0/segment-0.glog"), e.getMessage)
+    // a read whose bounds skip the damaged batch reads its header only
+    import spark.implicits._
+    assert(spark.read.format("glog").load(p).filter(col("offs") >= 200L)
+      .select("offs").as[Long].collect().sorted.toSeq == (200L until 250L))
+    assert(Glog.listEnds(p, spark.sparkContext.hadoopConfiguration) == Map("t/0" -> 250L))
+    // a length prefix claiming ~2 GB: the read fails on the bytes that are
+    // there, without allocating the claim
+    segment(p, "segment-0", (0L until 250L).map(rec))
+    val seg = java.nio.file.Paths.get(p, "topic=t", "part=0", "segment-0.glog")
+    val b = java.nio.ByteBuffer.wrap(java.nio.file.Files.readAllBytes(seg))
+    b.putInt(4 + b.getInt(0), Int.MaxValue - 64)
+    java.nio.file.Files.write(seg, b.array())
+    val t = intercept[org.apache.spark.SparkException](readAll(p))
+    assert(t.getMessage.contains("glog batch truncated"), t.getMessage)
+  }
+
+  test("a v5 segment with its .crc beside a v6 one reads, lists ends and compacts") {
+    def rec(offs: Long) = Glog.Rec("t", 0L, offs, offs, 1700000000000L + offs,
+      s"k${offs % 7}", s"v$offs")
+    // a v5 batch, as the writer before v6 encoded it
+    def v5(recs: Seq[Glog.Rec]): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bos)
+      out.writeByte(Glog.MagicO)
+      out.writeInt(recs.size)
+      out.writeLong(recs.head.offs)
+      out.writeLong(recs.map(_.tms).max)
+      out.writeLong(recs.map(_.offs).max)
+      recs.foreach { r =>
+        out.writeInt((r.offs - recs.head.offs).toInt)
+        out.writeLong(r.tms)
+        out.writeLong(r.event_id)
+        for (s <- Seq(r.k, r.v)) {
+          val b = s.getBytes("UTF-8"); out.writeInt(b.length); out.write(b)
+        }
+      }
+      out.flush()
+      bos.toByteArray
+    }
+    val p = java.nio.file.Files.createTempDirectory("graft_glog_mixed").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val older = (0L until 150L).map(rec)
+    // written through the checksummed local filesystem, `.crc` and all
+    val v5Seg = new org.apache.hadoop.fs.Path(s"$p/topic=t/part=0/segment-0.glog")
+    val o = new java.io.DataOutputStream(v5Seg.getFileSystem(conf).create(v5Seg, true))
+    for (batch <- older.grouped(Glog.MaxBatch).map(v5)) { o.writeInt(batch.length); o.write(batch) }
+    o.close()
+    val pDir = java.nio.file.Paths.get(p, "topic=t", "part=0")
+    assert(java.nio.file.Files.exists(pDir.resolve(".segment-0.glog.crc")))
+    val newer = (150L until 300L).map(rec)
+    segment(p, "segment-1", newer)
+    val all = older ++ newer
+    assert(readAll(p) == all)
+    assert(Glog.listEnds(p, conf) == Map("t/0" -> 300L))
+    val out = freshPath("graft_glog_mixed_c")
+    graft.sources.GlogOps.compactStore(spark, p, out)
+    assert(readAll(out) == all.groupBy(_.k).values.map(_.maxBy(_.offs)).toSeq.sortBy(_.offs))
+    // the Hadoop reader still checks a v5 segment against its `.crc`
+    rewrite(pDir.resolve("segment-0.glog"), "v100", "v10X")
+    intercept[org.apache.spark.SparkException](readAll(p))
+    // a v6 commit over that segment's name takes the stale `.crc` with it
+    segment(p, "segment-0", older)
+    assert(!java.nio.file.Files.exists(pDir.resolve(".segment-0.glog.crc")))
+    assert(readAll(p) == all)
+  }
+
   test("compaction survivors: null keys, full ties, later segments, offset order") {
     def rec(offs: Long, k: String, tms: Long, eid: Long) =
       Glog.Rec("t", 0L, offs, eid, tms, k, s"v$offs")
@@ -545,10 +634,9 @@ class GlogSpec extends AnyFunSuite {
     val out = freshPath("graft_glog_store_c")
     graft.sources.GlogOps.compactStore(spark, in, out)
     assert(readAll(out).map(_.offs) == Seq(0L, 1L))
-    // a compaction commits one file: the segment and its checksum
+    // a compaction commits one file: the segment
     assert(java.nio.file.Files.list(java.nio.file.Paths.get(out, "topic=t", "part=0"))
-      .toArray.map(_.toString.split('/').last).sorted.toSeq ==
-      Seq(".segment-0.glog.crc", "segment-0.glog"))
+      .toArray.map(_.toString.split('/').last).sorted.toSeq == Seq("segment-0.glog"))
     // a store with no partition directories writes nothing
     val empty = java.nio.file.Files.createTempDirectory("graft_glog_empty")
     java.nio.file.Files.createFile(empty.resolve("_SUCCESS"))

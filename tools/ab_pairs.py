@@ -10,8 +10,10 @@ perfbench's `[perfbench] record ...` stderr line. Then, for each end-to-end
 metric of BENCHMARK.json, it prints the median and quartiles of each side
 and the number of pairs the change won, and flags a median that moved by
 more than the parent's quartile spread. It also prints each side's median
-steal and, where the records hold per-query `cold_ms`/`warm_ms`
-(registry_queries), each query's cold and warm median per side.
+steal, where the records hold `ops_ms` (log_store) each operation kind's
+median per side (a run's median of that kind, then the median over runs),
+and, where they hold per-query `cold_ms`/`warm_ms` (registry_queries), each
+query's cold and warm median per side.
 
     python3 tools/ab_pairs.py PARENT_DIR CHANGE_DIR --workload log_store \\
         --seeds 1-10 --log ab_log_store.jsonl
@@ -83,17 +85,27 @@ def median_or_none(values):
     return statistics.median(values) if values else None
 
 
-def per_query_ms(run):
-    """{query: (cold ms, warm ms)} from a run's record, warm being the
-    median of its warm calls; empty when the record has no such fields."""
+def load_record(run):
+    """The run's perfbench record, or {} when the log names none."""
     path = run.get("record")
     if not path or not os.path.exists(path):
         return {}
     with open(path) as fh:
-        rec = json.load(fh)
+        return json.load(fh)
+
+
+def per_query_ms(rec):
+    """{query: (cold ms, warm ms)} from a record, warm being the median of
+    its warm calls; empty when the record has no such fields."""
     cold, warm = rec.get("cold_ms") or {}, rec.get("warm_ms") or {}
     return {q: (cold[q], statistics.median(warm[q]) if warm.get(q) else None)
             for q in cold}
+
+
+def per_kind_ms(rec):
+    """{operation kind: median ms} from a record's `ops_ms` (log_store);
+    empty when the record has none."""
+    return {k: statistics.median(ms) for k, ms in (rec.get("ops_ms") or {}).items() if ms}
 
 
 def print_side_detail(runs, workload, seeds):
@@ -103,7 +115,16 @@ def print_side_detail(runs, workload, seeds):
     steal = {side: median_or_none([r["steal_s"] for r in rs if r.get("steal_s") is not None])
              for side, rs in side_runs.items()}
     print(f"median steal s: parent {fmt(steal['parent'])}, change {fmt(steal['change'])}")
-    per_query = {side: [per_query_ms(r) for r in rs] for side, rs in side_runs.items()}
+    records = {side: [load_record(r) for r in rs] for side, rs in side_runs.items()}
+    per_kind = {side: [per_kind_ms(rec) for rec in recs] for side, recs in records.items()}
+    kinds = sorted({k for ks in per_kind.values() for ms in ks for k in ms})
+    if kinds:
+        print(f"{'op kind (median ms)':<24} {'parent':>12} {'change':>12}")
+        for k in kinds:
+            cells = [fmt(median_or_none([ms[k] for ms in per_kind[side] if k in ms]))
+                     for side in ("parent", "change")]
+            print(f"{k:<24} " + " ".join(f"{c:>12}" for c in cells))
+    per_query = {side: [per_query_ms(rec) for rec in recs] for side, recs in records.items()}
     names = sorted({q for qs in per_query.values() for ms in qs for q in ms})
     if not names:
         return

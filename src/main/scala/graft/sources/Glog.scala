@@ -4,8 +4,10 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFExc
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.log.LogOps
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** `glog` — the engine's own segment file format for the partitioned log,
   * the storage-engine analog of the reference's entry formats
@@ -63,6 +65,30 @@ object Glog {
 
   final case class Rec(topic: String, part: Long, offs: Long,
       event_id: Long, tms: Long, k: String, v: String)
+
+  /** The Hadoop configuration a glog task opens its stores with, as the
+    * task carries it. When every store it touches is local
+    * ([[graft.Tables.localPath]]) it carries none: a shipped
+    * `Configuration` costs one gzip inflate per property to deserialize,
+    * the largest part of a small glog task's CPU. Such a task gets an
+    * empty `Configuration`, under which Hadoop resolves a local path to
+    * the JVM's cached checksummed local filesystem, with the same open and
+    * list calls (so the `.crc` check on v3-v5 segments is unchanged). Any
+    * other scheme ships the session's conf.
+    */
+  final class TaskConf private (shipped: Option[SerializableConfiguration])
+      extends Serializable {
+    @transient private lazy val empty = new Configuration(false)
+    def value: Configuration = shipped.fold(empty)(_.value)
+  }
+
+  object TaskConf {
+    /** What a task that reads or writes the stores at `paths` carries. */
+    def apply(spark: SparkSession, paths: String*): TaskConf =
+      new TaskConf(
+        if (paths.forall(graft.Tables.localPath(_).isDefined)) None
+        else Some(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
+  }
 
   /** Test/diagnostic counters (single-JVM): batches decoded vs skipped by
     * the offset lower bound across all readers since last reset, and the
@@ -170,12 +196,15 @@ object Glog {
           f"stored ${h.crc}%08x, computed ${crc.getValue.toInt}%08x")
     }
 
-  /** Iterate a segment stream's records; batches entirely below `fromOffs`
-    * or at/after `untilOffs` are skipped from their headers without
+  /** Iterate a segment stream's records with `fromOffs <= offs <
+    * untilOffs` and `tms >= minTms`, exactly: the scan hands these bounds
+    * to Spark as applied. Batches entirely below `fromOffs`, at/after
+    * `untilOffs` or before `minTms` are skipped from their headers without
     * decoding (or even buffering) the records — the header is read off the
     * stream and the body is `skip`ped, so an offset/time seek never copies
     * payload bytes (the [from, until) window is how a micro-batch reads
-    * its slice). A v3/v4 batch has no max offset in its header, so the
+    * its slice). The records of a decoded batch are filtered on all three
+    * bounds. A v3/v4 batch has no max offset in its header, so the
     * lower-bound skip does not apply to it: it is decoded and filtered.
     *
     * `needK` / `needV` thread the scan's column pruning down to the codec:
@@ -235,7 +264,8 @@ object Glog {
           // records disagree with it is corrupt.
           require(h.magic < MagicO || h.n == 0 ||
             recs.iterator.map(_.offs).max == h.maxOffs, "bad batch header")
-          cur = recs.iterator.filter(r => r.offs >= fromOffs && r.offs < untilOffs)
+          cur = recs.iterator.filter(r =>
+            r.offs >= fromOffs && r.offs < untilOffs && r.tms >= minTms)
         }
       }
     }
@@ -308,18 +338,22 @@ object Glog {
     * reject names that cannot round-trip through either.
     */
   def validateTopic(topic: String): Unit =
-    require(topic != null && topic.nonEmpty && !topic.exists(("/\\" + '\u0000').contains(_)),
-      s"glog topic name not storable as a directory: '$topic'")
+    require(storableTopic(topic), s"glog topic name not storable as a directory: '$topic'")
+
+  /** Whether a topic name can be a glog directory name. */
+  def storableTopic(topic: String): Boolean =
+    topic != null && topic.nonEmpty && !topic.exists(("/\\" + '\u0000').contains(_))
 
   /** Executor-side segment writer: one shuffle onto (topic, part),
     * offset-sorted, then one [[writeSegment]] per (topic, part), with no
-    * driver involvement. A local store is written through java.nio, any
-    * other scheme through the Hadoop FileSystem API.
+    * driver involvement. A local store is written through java.nio and
+    * its tasks carry no Hadoop configuration ([[TaskConf]]); any other
+    * scheme is written through the Hadoop FileSystem API with the
+    * session's conf shipped to each task.
     */
   def writeSegments(ds: org.apache.spark.sql.Dataset[Rec], outPath: String,
       segName: String): Unit = {
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      ds.sparkSession.sparkContext.hadoopConfiguration)
+    val hconf = TaskConf(ds.sparkSession, outPath)
     import org.apache.spark.sql.functions.col
     ds.repartition(col("topic"), col("part"))
       .sortWithinPartitions("topic", "part", "offs")
@@ -354,7 +388,8 @@ object Glog {
     * `Files.newOutputStream` and published with `Files.move(ATOMIC_MOVE)`:
     * no process is forked (Hadoop's local filesystem runs `chmod` per
     * create without its native library) and no `.crc` file is written.
-    * Any other scheme goes through `FileSystem.create` and `rename`.
+    * Any other scheme goes through `FileSystem.create` and `rename` with
+    * `conf`, which a local store's commit never reads.
     */
   def writeSegment(conf: org.apache.hadoop.conf.Configuration, outPath: String,
       segName: String, topic: String, part: Long, recs: Iterator[Rec]): Unit = {

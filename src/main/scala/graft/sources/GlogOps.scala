@@ -6,7 +6,6 @@ import graft.log.LogOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.util.SerializableConfiguration
 
 /** Driver-checked query over the [[Glog]] store: materialize the log into
   * the engine's own segment format, read it back through the DataSource V2
@@ -74,14 +73,18 @@ object GlogOps {
     * do not (overlapping or unsorted segments) fails the job with an
     * IllegalStateException naming the directory. An input store with no
     * partition directories writes nothing.
+    *
+    * A task carries its directory, its (topic, part) and the two paths.
+    * When both stores are local it carries no Hadoop configuration
+    * ([[Glog.TaskConf]]); otherwise it carries the session's conf.
     */
   def compactStore(spark: SparkSession, inPath: String, outPath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(inPath)
-    val dirs = Glog.partitionDirs(root.getFileSystem(conf), root)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = Glog.partitionDirs(fs, root)
       .map { case (topic, part, dir) => (topic, part.toLong, dir.toString) }
     if (dirs.isEmpty) return
-    val hconf = new SerializableConfiguration(conf)
+    val hconf = Glog.TaskConf(spark, inPath, outPath)
     spark.sparkContext.parallelize(dirs, dirs.size).foreach {
       case (topic, part, dir) =>
         cleanPartition(hconf.value, topic, part, new Path(dir), outPath)

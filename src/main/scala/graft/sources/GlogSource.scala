@@ -13,23 +13,27 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for the [[Glog]] segment format:
   * `spark.read.format("glog").load(path)`.
   *
   * A (topic, part) directory is the unit of reading, as the log's
   * partition is: planning lists the directories that pushed topic/part
-  * equalities leave, without opening a file, and plans one input
-  * partition per directory holding all of its segment files. Pushed
-  * `offs` bounds and a `tms` lower bound travel to the reader, whose v5+
-  * batch headers skip every batch outside them without decoding it — the
-  * reference's fetch path (a bounded range scan of one topic-partition
-  * from an offset; MessageFetchContext.java) expressed as a Spark source.
-  * Column pruning drops unread fields before row materialization. All
-  * pushed filters are still re-applied by Spark above the scan
-  * (pushFilters returns them as residuals), so pruning can only ever skip
-  * data the filters exclude — never change results.
+  * equalities leave, without opening a file (both equalities name one
+  * directory, which is all it lists), and plans one input partition per
+  * directory holding all of its segment files. Pushed `offs` bounds and a
+  * `tms` lower bound travel to the reader, whose v5+ batch headers skip
+  * every batch outside them without decoding it — the reference's fetch
+  * path (a bounded range scan of one topic-partition from an offset;
+  * MessageFetchContext.java) expressed as a Spark source. Column pruning
+  * drops unread fields before row materialization.
+  *
+  * The pushed filters are applied exactly, so Spark does not re-apply
+  * them: `topic` and `part` equalities select directories, whose records
+  * all carry that topic and part, and [[Glog.readSegment]] drops every
+  * decoded record outside the `offs` and `tms` bounds. A residual with
+  * inlined literals would make each fetch's generated code new, a
+  * whole-stage compile per fetch. Every other filter stays a residual.
   */
 class GlogSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -84,38 +88,54 @@ class GlogScanBuilder(path: String, startLatest: Boolean = false,
   private var untilOffs: Long = Long.MaxValue
   private var minTms: Long = Long.MinValue
 
+  /** Keeps the filters the scan applies exactly and returns the rest as
+    * residuals: `topic` and `part` equality, `offs` `>=`, `>`, `<`, `<=`
+    * and `tms` `>=`, `>`, each against an integral literal where the
+    * column is a number. Everything else (`k`, `v`, `tms <`, `In`,
+    * `EqualNullSafe`, non-integral literals) stays with Spark.
+    */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case f @ EqualTo("topic", t: String) => topicEq = Some(t); used :+= f
-      case f @ EqualTo("part", p) if p.isInstanceOf[Number] =>
-        partEq = Some(p.asInstanceOf[Number].longValue()); used :+= f
-      case f @ GreaterThanOrEqual("offs", o) if o.isInstanceOf[Number] =>
-        fromOffs = math.max(fromOffs, o.asInstanceOf[Number].longValue()); used :+= f
-      case f @ GreaterThan("offs", o) if o.isInstanceOf[Number] =>
-        fromOffs = math.max(fromOffs, o.asInstanceOf[Number].longValue() + 1); used :+= f
-      case f @ LessThan("offs", o) if o.isInstanceOf[Number] =>
-        untilOffs = math.min(untilOffs, o.asInstanceOf[Number].longValue()); used :+= f
-      case f @ LessThanOrEqual("offs", o) if o.isInstanceOf[Number] =>
-        // offs <= Long.MaxValue selects everything; o+1 would wrap to
-        // Long.MinValue and silently prune EVERY row at the scan (rows
-        // dropped here are unrecoverable — the residual re-evaluation
-        // only filters, never restores). The GreaterThan(+1) mirror is
-        // safe because math.max clamps the wrapped value.
-        val o1 = o.asInstanceOf[Number].longValue()
-        if (o1 != Long.MaxValue) {
-          untilOffs = math.min(untilOffs, o1 + 1); used :+= f
-        }
-      case f @ GreaterThanOrEqual("tms", t) if t.isInstanceOf[Number] =>
-        minTms = math.max(minTms, t.asInstanceOf[Number].longValue()); used :+= f
-      case f @ GreaterThan("tms", t) if t.isInstanceOf[Number] =>
-        minTms = math.max(minTms, t.asInstanceOf[Number].longValue() + 1); used :+= f
-      case _ =>
-    }
-    // Everything remains a residual: Spark re-evaluates the full predicate
-    // above the scan, so pruning is a pure skip optimization.
-    filters
+    val (exact, residual) = filters.partition(push)
+    used ++= exact
+    residual
   }
   override def pushedFilters(): Array[Filter] = used
+
+  /** Narrow the scan by `f`; false when the scan cannot apply it exactly. */
+  private def push(f: Filter): Boolean = {
+    f match {
+      case EqualTo("topic", t: String) =>
+        if (topicEq.exists(_ != t)) selectNothing()
+        topicEq = Some(t)
+      case EqualTo("part", Integral(p)) =>
+        if (partEq.exists(_ != p)) selectNothing()
+        partEq = Some(p)
+      case GreaterThanOrEqual("offs", Integral(o)) => fromOffs = math.max(fromOffs, o)
+      case GreaterThan("offs", Integral(o)) =>
+        if (o == Long.MaxValue) selectNothing() else fromOffs = math.max(fromOffs, o + 1)
+      case LessThan("offs", Integral(o)) => untilOffs = math.min(untilOffs, o)
+      // offs <= Long.MaxValue holds for every row: no bound
+      case LessThanOrEqual("offs", Integral(o)) =>
+        if (o != Long.MaxValue) untilOffs = math.min(untilOffs, o + 1)
+      case GreaterThanOrEqual("tms", Integral(t)) => minTms = math.max(minTms, t)
+      case GreaterThan("tms", Integral(t)) =>
+        if (t == Long.MaxValue) selectNothing() else minTms = math.max(minTms, t + 1)
+      case _ => return false
+    }
+    true
+  }
+
+  /** No offset is below Long.MinValue: the scan plans no partition. */
+  private def selectNothing(): Unit = untilOffs = Long.MinValue
+
+  /** A literal of an integral type, as a Long. */
+  private object Integral {
+    def unapply(v: Any): Option[Long] = v match {
+      case n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+          _: java.lang.Byte) => Some(n.asInstanceOf[Number].longValue())
+      case _ => None
+    }
+  }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -139,6 +159,8 @@ class GlogScan(path: String, required: StructType, topicEq: Option[String],
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  // Micro-batch execution builds its scan without pushing filters, so a
+  // stream's scan has no bounds and Spark applies the query's filters.
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GlogMicroBatchStream(path, required, fromOffs, minTms, startLatest,
@@ -148,27 +170,43 @@ class GlogScan(path: String, required: StructType, topicEq: Option[String],
     val p = partEq.map(_.toString).getOrElse("*")
     s"GlogScan path=$path topic=$t part=$p fromOffs=" +
       (if (fromOffs == Long.MinValue) "-inf" else fromOffs.toString) +
+      " untilOffs=" + (if (untilOffs == Long.MaxValue) "inf" else untilOffs.toString) +
       " minTms=" + (if (minTms == Long.MinValue) "-inf" else minTms.toString)
   }
 
+  /** One input partition per planned (topic, part) directory that holds
+    * segment files. With both equalities pushed only that directory is
+    * listed (a missing one plans nothing), as the micro-batch planner
+    * does; otherwise the store is walked. Bounds no offset satisfies plan
+    * nothing.
+    */
   override def planInputPartitions(): Array[InputPartition] = {
     val root = new Path(path)
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(
+      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+    val dirs = (topicEq, partEq) match {
+      case _ if fromOffs >= untilOffs => Seq.empty
+      case (Some(t), Some(p)) =>
+        if (Glog.storableTopic(t)) Seq((t, p, Glog.partitionDir(path, t, p))) else Seq.empty
+      case _ =>
+        for {
+          (topic, part, dir) <- Glog.partitionDirs(fs, root)
+          if topicEq.forall(_ == topic) && partEq.forall(_ == part.toLong)
+        } yield (topic, part.toLong, dir)
+    }
     val parts = for {
-      (topic, part, dir) <- Glog.partitionDirs(fs, root)
-      if topicEq.forall(_ == topic) && partEq.forall(_ == part.toLong)
-      files = Glog.segmentFiles(fs, dir).map(_.getPath.toString)
+      (topic, part, dir) <- dirs
+      files = (try Glog.segmentFiles(fs, dir)
+        catch { case _: java.io.FileNotFoundException => Nil }).map(_.getPath.toString)
       if files.nonEmpty
-    } yield GlogPartition(files, topic, part.toLong, fromOffs, untilOffs, minTms)
+    } yield GlogPartition(files, topic, part, fromOffs, untilOffs, minTms)
     GlogSource.lastPlannedFiles.set(parts.map(_.files.size.toLong).sum)
     parts.toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GlogReaderFactory(required, new SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration))
+    new GlogReaderFactory(required,
+      Glog.TaskConf(org.apache.spark.sql.SparkSession.active, path))
 }
 
 /** Stream offset: the end offset (exclusive) per "topic/part" directory.
@@ -275,10 +313,11 @@ class GlogMicroBatchStream(path: String, required: StructType, minOffs: Long,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GlogReaderFactory(required, new SerializableConfiguration(conf))
+    new GlogReaderFactory(required,
+      Glog.TaskConf(org.apache.spark.sql.SparkSession.active, path))
 }
 
-class GlogReaderFactory(required: StructType, conf: SerializableConfiguration)
+class GlogReaderFactory(required: StructType, conf: Glog.TaskConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GlogPartition]

@@ -65,6 +65,12 @@ class GlogSpec extends AnyFunSuite {
     val want = LogOps.log(spark, dir)
       .filter(col("topic") === "click" && col("part") === 3L).count()
     assert(n == want)
+    // an absent (topic, part) plans nothing and raises nothing
+    for ((t, p) <- Seq(("click", 999L), ("no-such-topic", 3L))) {
+      GlogSource.lastPlannedFiles.set(-1)
+      assert(glog.filter(col("topic") === t && col("part") === p).count() == 0)
+      assert(GlogSource.lastPlannedFiles.get() == 0)
+    }
   }
 
   test("offset lower bound skips batches from their headers") {
@@ -177,6 +183,176 @@ class GlogSpec extends AnyFunSuite {
       assert(inputPartitions(got).contains(1))
       assert(Glog.batchesSkipped.get() > 0)
     }
+  }
+
+  /** A hand-built store: topics t and u, parts 0 and 1, each with 250
+    * records at offsets 0-249 whose tms rises 1 s per offset, in v6
+    * batches of 100 records.
+    */
+  private lazy val exactStore: (String, Seq[Glog.Rec]) = {
+    val p = java.nio.file.Files.createTempDirectory("graft_glog_exact").toString
+    val parts = for (t <- Seq("t", "u"); part <- Seq(0L, 1L)) yield
+      (0L until 250L).map(o => Glog.Rec(t, part, o, 1000L + o,
+        1700000000000L + o * 1000L, s"k${o % 10}", s"v$o"))
+    parts.foreach(segment(p, "segment-0", _))
+    (p, parts.flatten)
+  }
+
+  private def sorted(recs: Seq[Glog.Rec]) = recs.sortBy(r => (r.topic, r.part, r.offs))
+
+  /** `df`'s records, sorted. */
+  private def recsOf(df: org.apache.spark.sql.DataFrame): Seq[Glog.Rec] = {
+    import spark.implicits._
+    sorted(df.select("topic", "part", "offs", "event_id", "tms", "k", "v")
+      .as[Glog.Rec].collect().toSeq)
+  }
+
+  /** Push `filters` into a scan of `path` and read it on the driver:
+    * the residual filters and the records the reader returns.
+    */
+  private def scan(path: String, filters: org.apache.spark.sql.sources.Filter*)
+      : (Seq[org.apache.spark.sql.sources.Filter], Seq[Glog.Rec]) = {
+    val b = new graft.sources.GlogScanBuilder(path)
+    val residual = b.pushFilters(filters.toArray).toSeq
+    val batch = b.build().toBatch
+    val factory = batch.createReaderFactory()
+    val recs = batch.planInputPartitions().toSeq.flatMap { ip =>
+      val r = factory.createReader(ip)
+      try Iterator.continually(r).takeWhile(_.next()).map(_.get()).map(row =>
+        Glog.Rec(row.getUTF8String(0).toString, row.getLong(1), row.getLong(2),
+          row.getLong(3), row.getLong(4), row.getUTF8String(5).toString,
+          row.getUTF8String(6).toString)).toList
+      finally r.close()
+    }
+    (residual, sorted(recs))
+  }
+
+  test("the fetch shape's pushed bounds are exact: no filter re-applies a literal") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.FilterExec
+    def literalFilters(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.executedPlan.collect {
+        case f: FilterExec if f.condition.find(_.isInstanceOf[Literal]).isDefined => f
+      }
+    // the benchmark's fetch shapes, on the sf0.001 store
+    val log = LogOps.log(spark, dir)
+    for (bound <- Seq(col("offs") >= 5L && col("offs") < 20L,
+        col("tms") >= 1705276800000L, col("offs") > 3L && col("offs") <= 9L)) {
+      val cond = col("topic") === "click" && col("part") === 3L && bound
+      val got = glog.filter(cond)
+      assert(literalFilters(got).isEmpty, got.queryExecution.executedPlan)
+      assert(recsOf(got) == recsOf(log.filter(cond)))
+    }
+    // and on the hand-built store, where a bound cuts through batches
+    val (p, all) = exactStore
+    val got = spark.read.format("glog").load(p).filter(col("topic") === "u" &&
+      col("part") === 1L && col("offs") >= 120L && col("offs") < 180L)
+    assert(literalFilters(got).isEmpty, got.queryExecution.executedPlan)
+    assert(recsOf(got) == all.filter(r => r.topic == "u" && r.part == 1L &&
+      r.offs >= 120L && r.offs < 180L))
+  }
+
+  test("pushed bounds: conflicting equalities, > Long.MaxValue and <= Long.MaxValue") {
+    import org.apache.spark.sql.sources._
+    val (p, all) = exactStore
+    // two different equalities on one column select nothing; a repeated
+    // one selects what it selects once
+    assert(scan(p, EqualTo("topic", "t"), EqualTo("topic", "u")) == (Nil, Nil))
+    assert(scan(p, EqualTo("part", 0L), EqualTo("part", 1L)) == (Nil, Nil))
+    assert(scan(p, EqualTo("topic", "t"), EqualTo("topic", "t"))._2 ==
+      all.filter(_.topic == "t"))
+    // a lower bound past Long.MaxValue: no row is above it
+    assert(scan(p, GreaterThan("offs", Long.MaxValue)) == (Nil, Nil))
+    assert(scan(p, GreaterThan("tms", Long.MaxValue)) == (Nil, Nil))
+    // offs <= Long.MaxValue holds for every row
+    assert(scan(p, LessThanOrEqual("offs", Long.MaxValue)) == (Nil, sorted(all)))
+    // the same through the DataFrame API
+    val df = spark.read.format("glog").load(p)
+    assert(df.filter(col("offs") > Long.MaxValue).count() == 0)
+    assert(df.filter(col("tms") > Long.MaxValue).count() == 0)
+    assert(recsOf(df.filter(col("offs") <= Long.MaxValue)) == sorted(all))
+    // bounds no offset satisfies together
+    assert(scan(p, GreaterThanOrEqual("offs", 10L), LessThan("offs", 10L)) == (Nil, Nil))
+  }
+
+  test("a tms bound inside a batch drops the batch's earlier records") {
+    import org.apache.spark.sql.sources._
+    val (p, all) = exactStore
+    // offset 150's tms sits inside the batch holding offsets 100-199:
+    // the first batch is skipped from its header, the second is decoded
+    // and only its records from offset 150 on are returned
+    val cut = 1700000000000L + 150L * 1000L
+    val df = spark.read.format("glog").load(p)
+    def want(min: Long) = all.filter(r => r.topic == "t" && r.part == 0L && r.tms >= min)
+    Glog.batchesSkipped.set(0)
+    assert(recsOf(df.filter(col("topic") === "t" && col("part") === 0L &&
+      col("tms") >= cut)) == want(cut))
+    assert(Glog.batchesSkipped.get() == 1)
+    assert(recsOf(df.filter(col("topic") === "t" && col("part") === 0L &&
+      col("tms") > cut)) == want(cut + 1))
+    assert(scan(p, EqualTo("topic", "t"), EqualTo("part", 0L),
+      GreaterThanOrEqual("tms", cut)) == (Nil, want(cut)))
+  }
+
+  test("filters the scan does not apply stay residuals and are applied") {
+    import org.apache.spark.sql.sources._
+    val (p, all) = exactStore
+    val cut = 1700000000000L + 100L * 1000L
+    val unhandled: Seq[Filter] = Seq(EqualTo("k", "k3"), LessThan("tms", cut),
+      In("part", Array(0L, 1L)), EqualNullSafe("part", 0L), EqualTo("part", 1.5),
+      GreaterThanOrEqual("offs", 2.5), EqualTo("v", "v3"))
+    for (f <- unhandled) assert(scan(p, f)._1 == Seq(f))
+    val got = spark.read.format("glog").load(p).filter(col("topic") === "t" &&
+      col("part") === 0L && col("k") === "k3" && col("tms") < cut)
+    assert(recsOf(got) == all.filter(r => r.topic == "t" && r.part == 0L &&
+      r.k == "k3" && r.tms < cut))
+    assert(recsOf(got).map(_.offs) == (3L until 100L by 10L))
+  }
+
+  test("a store under a non-local scheme: append, listEnds, bounded read, compaction") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.glogtest.impl", classOf[SchemeLocalFs].getName)
+    try {
+      val local = java.nio.file.Files.createTempDirectory("graft_glog_scheme")
+      val store = s"glogtest:$local"
+      def rec(part: Long, o: Long) = Glog.Rec("t", part, o, 1000L + o,
+        1700000000000L + o * 1000L, s"k${o % 7}", s"v$part-$o")
+      val first = for (part <- Seq(0L, 1L); o <- 0L until 150L) yield rec(part, o)
+      val second = for (part <- Seq(0L, 1L); o <- 150L until 300L) yield rec(part, o)
+      Glog.writeSegments(spark.createDataset(first), store, "segment-b0")
+      Glog.writeSegments(spark.createDataset(second), store, "segment-b1")
+      val all = sorted(first ++ second)
+      // the commits went through FileSystem.create and rename
+      assert(java.nio.file.Files.list(local.resolve("topic=t").resolve("part=1"))
+        .toArray.map(_.toString.split('/').last).sorted.toSeq ==
+        Seq("segment-b0.glog", "segment-b1.glog"))
+      assert(Glog.listEnds(store, conf) == Map("t/0" -> 300L, "t/1" -> 300L))
+      assert(readAll(store) == all)
+      val df = spark.read.format("glog").load(store)
+      assert(recsOf(df.filter(col("topic") === "t" && col("part") === 1L &&
+        col("offs") >= 120L && col("offs") < 210L)) ==
+        all.filter(r => r.part == 1L && r.offs >= 120L && r.offs < 210L))
+      assert(recsOf(df.filter(col("tms") >= 1700000000000L + 250L * 1000L)) ==
+        all.filter(_.offs >= 250L))
+      val out = s"glogtest:${freshPath("graft_glog_scheme_c")}"
+      graft.sources.GlogOps.compactStore(spark, store, out)
+      assert(readAll(out) == sorted(all.groupBy(r => (r.part, r.k)).values
+        .map(_.maxBy(_.offs)).toSeq))
+      // only a store under another scheme ships the session's conf to its readers
+      def shipsConf(path: String) = {
+        val factory = new graft.sources.GlogTable(path)
+          .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+          .build().toBatch.createReaderFactory()
+        val bos = new java.io.ByteArrayOutputStream()
+        val o = new java.io.ObjectOutputStream(bos)
+        o.writeObject(factory)
+        o.close()
+        new String(bos.toByteArray, "ISO-8859-1").contains("SerializableConfiguration")
+      }
+      assert(shipsConf(store))
+      assert(!shipsConf(local.toString) && !shipsConf(s"file:$local"))
+    } finally conf.unset("fs.glogtest.impl")
   }
 
   test("a stale .glogx stats file beside a segment drops no rows") {
@@ -756,4 +932,13 @@ class GlogSpec extends AnyFunSuite {
     val want = LogOps.log(spark, dir).select("k").distinct().count()
     assert(ks == want)
   }
+}
+
+/** The raw local filesystem under the `glogtest` scheme, which
+  * [[graft.Tables.localPath]] does not call local: a store there takes the
+  * glog paths that ship the session's Hadoop configuration and commit
+  * through `FileSystem.create` and `rename`.
+  */
+class SchemeLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("glogtest:///")
 }

@@ -11,7 +11,8 @@ metric of BENCHMARK.json, it prints the median and quartiles of each side
 and the number of pairs the change won, and flags a median that moved by
 more than the parent's quartile spread. It also prints each side's median
 steal, where the records hold `ops_ms` (log_store) each operation kind's
-median per side (a run's median of that kind, then the median over runs),
+median per side (a run's median of that kind, then the median over runs)
+with the pairs in which the change's run median of the kind was lower,
 and, where they hold per-query `cold_ms`/`warm_ms` (registry_queries), each
 query's cold and warm median per side.
 
@@ -115,16 +116,23 @@ def print_side_detail(runs, workload, seeds):
     steal = {side: median_or_none([r["steal_s"] for r in rs if r.get("steal_s") is not None])
              for side, rs in side_runs.items()}
     print(f"median steal s: parent {fmt(steal['parent'])}, change {fmt(steal['change'])}")
-    records = {side: [load_record(r) for r in rs] for side, rs in side_runs.items()}
-    per_kind = {side: [per_kind_ms(rec) for rec in recs] for side, recs in records.items()}
-    kinds = sorted({k for ks in per_kind.values() for ms in ks for k in ms})
+    records = {side: {r["seed"]: load_record(r) for r in rs} for side, rs in side_runs.items()}
+    per_kind = {side: {seed: per_kind_ms(rec) for seed, rec in recs.items()}
+                for side, recs in records.items()}
+    kinds = sorted({k for ks in per_kind.values() for ms in ks.values() for k in ms})
     if kinds:
-        print(f"{'op kind (median ms)':<24} {'parent':>12} {'change':>12}")
+        print(f"{'op kind (median ms)':<24} {'parent':>12} {'change':>12} {'won':>6}")
         for k in kinds:
-            cells = [fmt(median_or_none([ms[k] for ms in per_kind[side] if k in ms]))
+            cells = [fmt(median_or_none([ms[k] for ms in per_kind[side].values() if k in ms]))
                      for side in ("parent", "change")]
-            print(f"{k:<24} " + " ".join(f"{c:>12}" for c in cells))
-    per_query = {side: [per_query_ms(rec) for rec in recs] for side, recs in records.items()}
+            # a pair is one seed whose two runs both timed the kind
+            pairs = [(p[k], per_kind["change"][seed][k])
+                     for seed, p in per_kind["parent"].items()
+                     if k in p and k in per_kind["change"].get(seed, {})]
+            won = f"{sum(c < p for p, c in pairs)}/{len(pairs)}" if pairs else "-"
+            print(f"{k:<24} " + " ".join(f"{c:>12}" for c in cells) + f" {won:>6}")
+    per_query = {side: [per_query_ms(rec) for rec in recs.values()]
+                 for side, recs in records.items()}
     names = sorted({q for qs in per_query.values() for ms in qs for q in ms})
     if not names:
         return
